@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Benchmark main: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR. Queries run in name order after a scan warmup so
@@ -91,8 +93,26 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(e) => failed(name, e); -1.0 }
   }
+
+  // Why each failed entry failed: (entry, exception class, first message
+  // line), in first-seen order. Each failure is printed to stderr as it
+  // happens and the list goes into the JSON line, so a -1 is never silent.
+  private val failures = mutable.LinkedHashSet.empty[(String, String, String)]
+
+  private def failed(entry: String, e: Throwable): Unit = {
+    val msg = String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")
+    System.err.println(s"$entry: ${e.getClass.getName}: $msg")
+    failures.synchronized(failures += ((entry, e.getClass.getName, msg.take(500))))
+  }
+
+  /** The failures as a JSON list of [entry, class, message] triples: at
+    * most `limit` of them, each message cut to `msgChars`. */
+  private def failuresJson(limit: Int, msgChars: Int): String =
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+      failures.synchronized(failures.toSeq).take(limit)
+        .map { case (n, c, m) => Seq(n, c, m.take(msgChars)).asJava }.asJava)
 
   /** One UNTIMED headline pass (whole-stage codegen + JIT of every
     * headline plan would otherwise land on timed pass 1 — measured ~2×
@@ -154,7 +174,7 @@ object Bench {
       val parts = line.split(" ")
       val totals = parts(3).split(",").filter(_.nonEmpty).map(_.toDouble).toSeq
       Some((parts(1).toDouble, parts(2).toDouble, totals))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
   }
 
   def main(args: Array[String]): Unit = {
@@ -271,7 +291,7 @@ object Bench {
           val df = SparkEntry.queries(n)(spark, sfDir)
           df.collect()
           graft.plans.PlanLint.exchangeReuse(df)
-        } catch { case _: Throwable => (-1, -1) }
+        } catch { case NonFatal(e) => failed(n, e); (-1, -1) }
         n -> counts
       }
     // workload replay on this warm session (r10, verdict item 8) —
@@ -302,7 +322,7 @@ object Bench {
         val (t8, _) = completeTotals(p8, headlineNames)
         if (t8.isEmpty) { h8xFailed = true; None }
         else Some((r3(median(t8)), r3(t8.min), r3(t8.max)))
-      } catch { case scala.util.control.NonFatal(_) =>
+      } catch { case NonFatal(_) =>
         // a failed 8x row must be READABLE from the artifact, not an
         // absent key that diffs as "not applicable" (r10 review — the
         // same silent-degradation class as jvm_spawn_failures)
@@ -328,7 +348,7 @@ object Bench {
       val (r0, w0) = (shufRead.get(), shufWrite.get())
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-               catch { case _: Throwable => false }
+               catch { case NonFatal(e) => failed(name, e); false }
       val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       // listener events drain asynchronously — flush before the delta
       org.apache.spark.GraftSparkAccess.flushListeners(spark.sparkContext)
@@ -390,13 +410,14 @@ object Bench {
     val replayPerQ = replay.map(r =>
       s""","replay_per_query_p50_p95":${r.perQueryJson}""").getOrElse("")
     val full = emit(jsonMap(timings),
-      s""","shuffle_mb":$shuffleMap,"headline_pass_totals":$passesJson,"headline_pass_valid":$validJson,"headline_jvm_pass_totals":$childTotalsJson,"headline_sweep_sec":$headlineSweep,"exchange_reuse":$reuseMap,"exchange_reuse_total":[${reuseTotal._1},${reuseTotal._2}],"exchange_reuse_set_total":[${reuseSetTotal._1},${reuseSetTotal._2}]$replayPerQ,"headline_medians":${jsonMap(headlineMedians)}""")
+      s""","shuffle_mb":$shuffleMap,"headline_pass_totals":$passesJson,"headline_pass_valid":$validJson,"headline_jvm_pass_totals":$childTotalsJson,"headline_sweep_sec":$headlineSweep,"exchange_reuse":$reuseMap,"exchange_reuse_total":[${reuseTotal._1},${reuseTotal._2}],"exchange_reuse_set_total":[${reuseSetTotal._1},${reuseSetTotal._2}]$replayPerQ,"headline_medians":${jsonMap(headlineMedians)},"failures":${failuresJson(Int.MaxValue, 500)}""")
     val out = java.nio.file.Paths.get("target", "bench.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, full.getBytes("UTF-8"))
-    // stdout queries map = per-headline MEDIANS (bounded, ~500 chars)
+    // stdout queries map = per-headline MEDIANS (bounded, ~500 chars), and
+    // at most 3 failures with their messages cut to 80 chars
     println(emit(jsonMap(headlineMedians),
-      s""","headline_pass_valid":$validJson,"n_queries":${results.size},"all_queries_file":"target/bench.json""""))
+      s""","headline_pass_valid":$validJson,"n_queries":${results.size},"all_queries_file":"target/bench.json","failures":${failuresJson(3, 80)}"""))
     spark.stop()
   }
 }

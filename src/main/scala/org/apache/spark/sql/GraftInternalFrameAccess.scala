@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** `private[sql]` accessor (the GraftColumnAccess precedent):
@@ -13,6 +14,11 @@ import org.apache.spark.sql.types.StructType
   * RDD directly (fresh `LogicalRDD`, default stats, zero conversion).
   */
 object GraftInternalFrameAccess {
+  /** A frame over an already-built plan — [[graft.Tables]] serves its
+    * cached source relations through this (the `Dataset.ofRows` bridge). */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
   def wrap(spark: SparkSession, rdd: RDD[InternalRow],
            schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
