@@ -48,21 +48,6 @@ import scala.util.control.NonFatal
   */
 object Bench {
 
-  private[graft] def mkSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   // warmup: touch every table + exercise shuffle/codegen paths once
   private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
     Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().count()
@@ -180,7 +165,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = mkSession(cpus)
+    val spark = GraftSession.local(cpus.toInt)
     warmup(spark, sfDir)
     // SPARK_GRAFT_ONLY=q09_window_running,q22_percentile → bench just
     // those (isolated-regression runs); unset = full sweep
@@ -430,7 +415,7 @@ object BenchChild {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val cpus = args(1)
-    val spark = Bench.mkSession(cpus)
+    val spark = GraftSession.local(cpus.toInt)
     Bench.warmup(spark, sfDir)
     val names = Bench.headline.toSeq.sorted
     val loadBefore = Bench.loadAvg

@@ -63,7 +63,7 @@ object BenchReplay {
     val rounds = args.headOption.map(_.toInt).getOrElse(5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark: SparkSession = Bench.mkSession(cpus)
+    val spark = GraftSession.local(cpus.toInt)
     Bench.warmup(spark, sfDir)
     val names = Bench.headline.toSeq.sorted
     names.foreach(Bench.timeOne(spark, sfDir, _)) // untimed codegen pass

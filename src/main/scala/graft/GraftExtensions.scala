@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extensions registering graft's native Catalyst functions.
   *
-  * Wire up with `SparkSession.builder.withExtensions(new GraftExtensions)`
-  * or `--conf spark.sql.extensions=graft.GraftExtensions`. Once injected,
+  * [[GraftSession.local]] installs them; elsewhere pass
+  * `--conf spark.sql.extensions=graft.GraftExtensions`. Once injected,
   * the functions are first-class in SQL and via
   * `functions.call_function("vec_dot", a, b)` — no UDF registry, full
   * codegen in the hot path.

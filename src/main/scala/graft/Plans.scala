@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dev tool: dump `.explain("formatted")` for every catalog query so scan
   * pushdown (PushedFilters/ReadSchema), join strategies, and
@@ -12,17 +12,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "target/plans"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     Files.createDirectories(Paths.get(outDir))
     // SPARK_GRAFT_ONLY=a,b — dump just those plans (same contract as
     // Verify/Bench); unset = full catalog
@@ -48,10 +38,10 @@ object Plans {
             s"$name exchanges=$nEx warns=${warns.size}" +
               (if (warns.isEmpty) ""
                else warns.map(w => s" [${w.rule}: ${w.detail}]").mkString) + "\n")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           lintReport.append(s"$name LINT FAILED: $e\n")
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         Files.writeString(Paths.get(s"$outDir/$name.txt"), s"PLAN FAILED: $e")
         lintReport.append(s"$name PLAN FAILED: $e\n")
       }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, PrefixIndex}
 
@@ -29,16 +28,7 @@ object PrefixSoak {
     val batches = args.drop(1).headOption.map(_.toInt).getOrElse(16)
     val src = args.drop(2).headOption.getOrElse("/root/testdata/sf0.1")
     val verify = sys.env.get("GRAFT_SOAK_VERIFY").forall(_ != "0")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
 
     val base = ScaleSoak.materialize(spark, src, rep)
     val docs = spark.read.parquet(s"$base/documents.parquet")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: scale-sanity probe. Replicates the fact tables N× (with
@@ -13,16 +13,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val rep = if (args.nonEmpty) args(0).toInt else 8
     val d = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
 
     def replicate(df: DataFrame, keyCols: Seq[String], shift: Long): DataFrame = {
       val copies = (0 until rep).map { i =>

@@ -89,16 +89,7 @@ object ScaleSoak {
   def main(args: Array[String]): Unit = {
     val rep = args.headOption.map(_.toInt).getOrElse(8)
     val src = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     val dst = materialize(spark, src, rep)
 
     // SOAK_ONLY=a,b overrides the default top-wall-time list (used to

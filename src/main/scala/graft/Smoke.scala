@@ -1,18 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Smoke-test main mirroring the driver's t1 check: SparkEntry.entry on
   * sf0.001 must return rows > 0. Not part of the driver contract. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, false)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.PlanLint
-import org.apache.spark.sql.SparkSession
 
 /** Enumerates every catalog entry whose physical plan carries an
   * unpartitioned WindowExec (the PlanLint `global-window` rule), with
@@ -17,16 +16,7 @@ import org.apache.spark.sql.SparkSession
 object WindowAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(8)
     var bad = 0
     var flagged = 0
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {

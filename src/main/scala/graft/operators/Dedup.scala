@@ -12,20 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Dev-only phase profiler (`-Dgraft.prefix.profile=1`, the
-    * [[PrefixIndex]] hook reused): one `PPJOINPROF <tag> <sec>` line per
-    * wrapped phase. Zero cost when off — guide §1 "measure first"
-    * applied to the PPJoin path. */
-  private def prof[T](tag: String)(body: => T): T = {
-    if (!sys.props.get("graft.prefix.profile").contains("1")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"PPJOINPROF $tag ${(System.nanoTime() - t0) / 1e9}%.3f")
-      r
-    }
-  }
-
   /** 3-word shingles of the whitespace tokenization, as an array column.
     * One codegen'd kernel pass (r12, guide §4) — the HOF
     * `transform(sequence…, i → array_join(slice(words,…), " "))` form it
@@ -1330,21 +1316,21 @@ object Dedup {
                         tn: Int, td: Int,
                         tokenizer: Column => Column): DataFrame = {
     require(0 < tn && tn < td, s"threshold $tn/$td out of (0,1)")
-    val w = prof("ppjoin.tokenize_ckpt") { docs
+    val w = docs
       .select(col("doc_id"), tokenizer(col("text")).as("ws"))
-      .localCheckpoint(true) } // index, sizes, and pair verify read it
+      .localCheckpoint(true) // index, sizes, and pair verify read it
     val e = w.select(col("doc_id"), explode(col("ws")).as("tok"))
     val dfTok = e.groupBy("tok").agg(count(lit(1)).as("df"))
     val sz = w.select(col("doc_id"), size(col("ws")).cast("long").as("n"))
     // per-doc rarity rank: the window frame is one document's tokens
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(col("df"), col("tok"))
-    val pref = prof("ppjoin.prefix_ckpt") { e.join(dfTok, Seq("tok"))
+    val pref = e.join(dfTok, Seq("tok"))
       .withColumn("r", row_number().over(byDoc))
       .join(sz, Seq("doc_id"))
       .filter(col("r") <= expr(s"n - ($tn * n + ${td - 1}) DIV $td + 1"))
       .select(col("doc_id"), col("tok"), col("r"), col("n"))
-      .localCheckpoint(true) } // both sides of the candidate self-join
+      .localCheckpoint(true) // both sides of the candidate self-join
     // SIZE-ADAPTIVE VERIFY (r12, guide §3.1/§2.3): the exact per-pair
     // intersection needs each candidate's two token SETS. The narrow
     // exploded form below shuffles |cands|·avgN verify rows — it never
@@ -1365,11 +1351,9 @@ object Dedup {
     val bcastBudget = sys.props.get("graft.ppjoin.broadcast.mb")
       .orElse(sys.env.get("GRAFT_PPJOIN_BROADCAST_MB")).map(_.toLong)
       .getOrElse(256L) * (1L << 20)
-    val wBytesEst = prof("ppjoin.bcast_estimate") {
-      w.agg(coalesce(sum(aggregate(col("ws"), lit(0L),
-          (acc, t) => acc + length(t).cast("long") + lit(16L)) + lit(64L)),
-        lit(0L))).first().getLong(0)
-    }
+    val wBytesEst = w.agg(coalesce(sum(aggregate(col("ws"), lit(0L),
+        (acc, t) => acc + length(t).cast("long") + lit(16L)) + lit(64L)),
+      lit(0L))).first().getLong(0)
     val bcastVerify = wBytesEst * 4 <= bcastBudget
     // KERNEL VERIFY (r12, guide §3.1/§4): under the SAME measured-size
     // gate, intern the doc token sets driver-side (the bytes the
@@ -1390,11 +1374,10 @@ object Dedup {
     }
     // bands <= 0 → auto-size from the candidate-volume estimate against
     // the configured disk budget (default 64 GiB); explicit bands wins
-    val effBands = prof("ppjoin.auto_bands") {
-      if (bands > 0) bands
+    val effBands = if (bands > 0) bands
       else autoPrefixBands(pref, sz,
         sys.env.get("GRAFT_PREFIX_DISK_BUDGET_GB").map(_.toLong)
-          .getOrElse(64L) * (1L << 30), verifyFanout = !bcastVerify) }
+          .getOrElse(64L) * (1L << 30), verifyFanout = !bcastVerify)
     def bandOut(b: Int): DataFrame = {
       val prefA0 =
         if (effBands == 1) pref

@@ -627,10 +627,10 @@ object Graph {
     * past the fixpoint are no-ops and the fixpoint label frame is
     * identical for any k ≥ 1 (SccSpec pins 1 ≡ 2 ≡ 4). The win is
     * driver/job-launch overhead — exactly what multiplies on a 1000-
-    * executor cluster. Measured A/B at sf0.1/local[32] (WarmBench,
-    * warm-pass medians): unroll 1 → 11.1 s, 2 → 9.6 s (−13%), 4 →
-    * 11.6 s (doubled-per-hop plan size eats the launch saving) — so
-    * the default is 2 (PLANS.md r8).
+    * executor cluster. Measured A/B at sf0.1/local[32] (warm-pass
+    * medians of one entry, PLANS.md r8): unroll 1 → 11.1 s, 2 → 9.6 s
+    * (−13%), 4 → 11.6 s (doubled-per-hop plan size eats the launch
+    * saving) — so the default is 2.
     */
   def scc(edges: DataFrame, maxOuter: Int = 64, maxInner: Int = 256,
           unrollHops: Int = 2): DataFrame = {

@@ -36,18 +36,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   */
 object IncrementalCorpus {
 
-  /** Dev-only phase profiler (`-Dgraft.prefix.profile=1`, the repo-wide
-    * hook): one `PP4PROF <tag> <sec>` line per phase; zero cost off. */
-  private def prof[T](tag: String)(body: => T): T = {
-    if (!sys.props.get("graft.prefix.profile").contains("1")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"PP4PROF $tag ${(System.nanoTime() - t0) / 1e9}%.3f")
-      r
-    }
-  }
-
   private val ThresholdPm = 500
 
   private def docsDir(stateDir: String) = s"$stateDir/docs"
@@ -103,15 +91,15 @@ object IncrementalCorpus {
       .filter(col("doc_id") === col("mn")).drop("mn")
     // ONE read of the stored docs state serves both the dedup anti-join
     // and the cross-pair sizes below
-    val stored = prof("ingest.stored_ckpt")(storedDocs(spark, stateDir, batchId)
-      .select(col("doc_id"), col("h"), col("ng")).localCheckpoint(true))
+    val stored = storedDocs(spark, stateDir, batchId)
+      .select(col("doc_id"), col("h"), col("ng")).localCheckpoint(true)
     // cross-batch exact dedup: first arrival wins
-    val fresh = prof("ingest.fresh_ckpt")(fresh0
+    val fresh = fresh0
       .join(stored.select("h").distinct(), Seq("h"), "left_anti")
-      .localCheckpoint(true)) // shingling + doc append consume it
-    val sg = prof("ingest.shingle_ckpt")(fresh
+      .localCheckpoint(true) // shingling + doc append consume it
+    val sg = fresh
       .select(col("doc_id"), array_distinct(Dedup.shingles(col("t"))).as("sg"))
-      .localCheckpoint(true)) // inverted index + sizes share one shingling
+      .localCheckpoint(true) // inverted index + sizes share one shingling
     val grams = sg.select(col("doc_id"), explode(col("sg")).as("g"))
     val sizes = sg.select(col("doc_id"), size(col("sg")).cast("long").as("ng"))
 
@@ -134,8 +122,7 @@ object IncrementalCorpus {
         .join(grams.select(col("g"), col("doc_id").as("id_b")), Seq("g"))
         .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter")),
       stored, sizes)
-    val pairs = prof("ingest.pairs_ckpt")(
-      within.unionByName(cross).localCheckpoint(true))
+    val pairs = within.unionByName(cross).localCheckpoint(true)
 
     // The three pre-marker writes (label merge, doc append, gram
     // append) run CONCURRENTLY (guide §2.6 — the PrefixIndex item-10
@@ -147,15 +134,15 @@ object IncrementalCorpus {
     // pairs, and the appends are partition OVERWRITES. Inputs are all
     // derived from checkpointed frames, so the concurrent actions never
     // recompute a shared uncheckpointed lineage.
-    val hasPairs = prof("ingest.pairs_nonempty")(pairs.limit(1).count() > 0)
-    prof("ingest.parallel_writes")(PrefixIndex.inParallel(
+    val hasPairs = pairs.limit(1).count() > 0
+    PrefixIndex.inParallel(
       () => if (hasPairs)
         CcIndex.update(spark, ccDir(stateDir), pairs, batchId, numBuckets),
       () => sizes.join(fresh.select("doc_id", "h"), Seq("doc_id"))
         .select("doc_id", "h", "ng")
         .write.mode("overwrite").parquet(s"${docsDir(stateDir)}/__batch=$batchId"),
       () => grams.write.mode("overwrite")
-        .parquet(s"${gramsDir(stateDir)}/__batch=$batchId")))
+        .parquet(s"${gramsDir(stateDir)}/__batch=$batchId"))
     fs.mkdirs(marker.getParent)
     fs.create(marker).close()
   }

@@ -146,19 +146,6 @@ import org.apache.spark.sql.functions._
   */
 object PrefixIndex {
 
-  /** Dev-only phase profiler (`-Dgraft.prefix.profile=1`): one
-    * `PREFIXPROF <tag> <sec>` line per wrapped phase. Zero cost when
-    * off — the guide's "measure first" applied to the ingest path. */
-  private def prof[T](tag: String)(body: => T): T = {
-    if (!sys.props.get("graft.prefix.profile").contains("1")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"PREFIXPROF $tag ${(System.nanoTime() - t0) / 1e9}%.3f")
-      r
-    }
-  }
-
   private def defaultBudget: Long =
     sys.env.get("GRAFT_PREFIX_DISK_BUDGET_GB").map(_.toLong)
       .getOrElse(64L) * (1L << 30)
@@ -218,7 +205,7 @@ object PrefixIndex {
     * parquet), clamped to [8, 65536]. The r11-original flat 64 was
     * tuned for the 16× soak and cost the sf0.1 bench ~8 s/entry in
     * 64-dir write commits + listings on a 300 KB corpus (measured:
-    * PREFIXPROF write phases 8.2 s of dd24's 50.8 s); at 100 TB a flat
+    * write phases 8.2 s of dd24's 50.8 s); at 100 TB a flat
     * 64 is far too COARSE for candidate pruning. Every build/compact
     * persists whatever it chose (`_buckets_e<N>`), so adaptivity adds
     * no new correctness surface: reads always prune with the persisted
@@ -283,23 +270,18 @@ object PrefixIndex {
     * markers and dot-files are not data. A dir a crash left without
     * committed files is indistinguishable from absent (r10 ADVICE:
     * `fs.exists` alone turned such a dir into a fatal schema-inference
-    * error on every later read). */
+    * error on every later read). Walks with `listStatus`: `listFiles`
+    * also looks up every file's block locations. */
   private[graft] def hasData(spark: SparkSession, path: String): Boolean = {
     val fs = hadoopFs(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(p)) false
-    else {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        val under = f.getPath.toString
-        if (!name.startsWith("_") && !name.startsWith(".") &&
-            !under.contains("/_temporary/")) found = true
-      }
-      found
+    def committed(f: org.apache.hadoop.fs.FileStatus): Boolean = {
+      val name = f.getPath.getName
+      if (f.isDirectory)
+        name != "_temporary" && fs.listStatus(f.getPath).exists(committed)
+      else !name.startsWith("_") && !name.startsWith(".")
     }
+    val p = new org.apache.hadoop.fs.Path(path)
+    fs.exists(p) && committed(fs.getFileStatus(p))
   }
 
   // ---- epoch resolution (compaction commit marker) --------------------
@@ -779,9 +761,9 @@ object PrefixIndex {
     val bcastBudget = sys.props.get("graft.ppjoin.broadcast.mb")
       .orElse(sys.env.get("GRAFT_PPJOIN_BROADCAST_MB")).map(_.toLong)
       .getOrElse(256L) * (1L << 20)
-    val postBytesEst = prof("verify.bcast_estimate")(
+    val postBytesEst =
       post.agg(coalesce(sum(length(col("tok")) + lit(16L)), lit(0L)))
-        .first().getLong(0))
+        .first().getLong(0)
     val bcastVerify = postBytesEst * 4 <= bcastBudget
     lazy val docSets =
       post.groupBy("doc_id").agg(collect_set(col("tok")).as("ws"))
@@ -877,47 +859,45 @@ object PrefixIndex {
       // the planner lost the accurate parquet scan statistics and
       // repicked join strategies. The disk re-reads stay: they are what
       // gives Catalyst real sizes.
-      val e = prof("build.tokens")(tokens(docs).localCheckpoint(true))
-      val sz = prof("build.sizes")(
+      val e = tokens(docs).localCheckpoint(true)
+      val sz =
         e.groupBy("doc_id").agg(count(lit(1)).as("n"))
-          .localCheckpoint(true)) // stats + the sizes marker read it
-      val statsRow = prof("build.stats_row")(
+          .localCheckpoint(true) // stats + the sizes marker read it
+      val statsRow =
         sz.agg(count(lit(1)).cast("long").as("docs"),
-          coalesce(sum("n"), lit(0L)).cast("long").as("sum_n")).first())
+          coalesce(sum("n"), lit(0L)).cast("long").as("sum_n")).first()
       val b = adaptiveBuckets(statsRow.getLong(1))
       writeBucketsMarker(spark, dir, 0L, b) // the layout's modulus, first
       // df must land before prefixOf (it re-reads df from disk for real
       // scan stats); postings is independent — overlap them (§2.6)
-      prof("build.write_df_postings")(inParallel(
+      inParallel(
         () => writeData(
           e.groupBy("tok").agg(count(lit(1)).as("df")),
           s"$dir/df", "df", "overwrite", b),
-        () => writeData(e, s"$dir/postings", "postings", "overwrite", b)))
+        () => writeData(e, s"$dir/postings", "postings", "overwrite", b))
       val pref = prefixOf(e, readData(spark, s"$dir/df", "tb", None), tn, td)
-      prof("build.write_prefix")(
-        writeData(pref, s"$dir/prefix", "prefix", "overwrite", b))
+      writeData(pref, s"$dir/prefix", "prefix", "overwrite", b)
       // valve-estimate aux state (estimate metadata only — see scaladoc);
       // pdf re-reads prefix from disk, stats is independent — overlap
-      prof("build.write_pdf_stats")(inParallel(
+      inParallel(
         () => writeData(
           readData(spark, s"$dir/prefix", "tb", None).groupBy("tok")
             .agg(count(lit(1)).cast("long").as("c")),
           s"$dir/pdf", "pdf", "overwrite", b),
         () => spark.range(1).select(lit(statsRow.getLong(0)).as("docs"),
             lit(statsRow.getLong(1)).as("sum_n"))
-          .write.mode("overwrite").parquet(s"$dir/stats")))
-      prof("build.write_sizes")(
-        writeData(sz, s"$dir/sizes", "sizes", "overwrite", b)) // commit marker last
+          .write.mode("overwrite").parquet(s"$dir/stats"))
+      writeData(sz, s"$dir/sizes", "sizes", "overwrite", b) // commit marker last
       val stored = readData(spark, s"$dir/prefix", "tb", None)
       val sizes = readData(spark, s"$dir/sizes", "db", None)
-      val eff = prof("build.valve")(resolveBands(bands,
-        autoBands(stored, stored, selfJoin = true, sizes, budgetBytes)))
+      val eff = resolveBands(bands,
+        autoBands(stored, stored, selfJoin = true, sizes, budgetBytes))
       // at build the verify reads whole dirs anyway (stored side IS the
       // batch) — keep the candidate plan LAZY; materialization is only
       // the ingest path's pruning driver
-      val cands = prof("build.candidates")(candidatesOf(stored,
+      val cands = candidatesOf(stored,
         stored.withColumn("is_old", lit(false)), tn, td, eff,
-        materialize = eff > 1))
+        materialize = eff > 1)
       verifyOf(cands, readData(spark, s"$dir/postings", "db", None),
         sizes, tn, td, eff)
     } finally releaseLock(spark, dir)
@@ -951,14 +931,14 @@ object PrefixIndex {
       // epoch read is a Spark action on a compacted index)
       val (pairsPlan, eNew, prefNew, szNew) =
         ingestPairsAt(newDocs, dir, tn, td, bands, budgetBytes, ep, b)
-      val pairs = prof("append.verify_pairs")(pairsPlan
-        .localCheckpoint(true)) // materialize BEFORE the appends below
+      val pairs = pairsPlan
+        .localCheckpoint(true) // materialize BEFORE the appends below
       // the four pre-marker appends are mutually independent (prefix/
       // postings/pdf read only the batch checkpoints; estimate-aux
       // BEFORE the marker: a crash in between only inflates a future
       // estimate — the safe direction, never a lost committed delta) —
       // overlap them (§2.6); the marker write stays strictly last
-      prof("append.write_premarker")(inParallel(
+      inParallel(
         () => writeData(
           prefNew, dataPath(dir, "prefix", ep), "prefix", "append", b),
         () => writeData(
@@ -968,9 +948,8 @@ object PrefixIndex {
           dataPath(dir, "pdf", ep), "pdf", "append", b),
         () => szNew.agg(count(lit(1)).cast("long").as("docs"),
             coalesce(sum("n"), lit(0L)).cast("long").as("sum_n"))
-          .write.mode("append").parquet(dataPath(dir, "stats", ep))))
-      prof("append.write_sizes")(writeData(
-        szNew, dataPath(dir, "sizes", ep), "sizes", "append", b)) // marker
+          .write.mode("append").parquet(dataPath(dir, "stats", ep)))
+      writeData(szNew, dataPath(dir, "sizes", ep), "sizes", "append", b) // marker
       // auto-compaction policy (see [[defaultCompactFiles]]): growth
       // since the last compaction, measured on the committed state AFTER
       // the marker, so a crash inside compact() can never orphan this
@@ -1012,36 +991,35 @@ object PrefixIndex {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val spark = newDocs.sparkSession
     // bounded bucket selectors (≤ B ints each — partition-dir lists)
-    val newIdBuckets = prof("ingest.id_buckets")(bucketsOf(newDocs, "doc_id", b))
+    val newIdBuckets = bucketsOf(newDocs, "doc_id", b)
     val known = readData(spark, dataPath(dir, "sizes", ep), "db",
       Some(newIdBuckets)).select("doc_id")
     val fresh = newDocs.join(known, Seq("doc_id"), "left_anti")
-    val eNew = prof("ingest.tokens")(tokens(fresh).localCheckpoint(true))
-    val tokBuckets = prof("ingest.tok_buckets")(bucketsOf(eNew, "tok", b))
-    val prefNew = prof("ingest.prefix")(prefixOf(eNew,
+    val eNew = tokens(fresh).localCheckpoint(true)
+    val tokBuckets = bucketsOf(eNew, "tok", b)
+    val prefNew = prefixOf(eNew,
         readData(spark, dataPath(dir, "df", ep), "tb", Some(tokBuckets)),
         tn, td)
-      .localCheckpoint(true)) // candidate side + the index append
-    val szNew = prof("ingest.sizes")(
+      .localCheckpoint(true) // candidate side + the index append
+    val szNew =
       eNew.groupBy("doc_id").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true)) // verify size side + the index append
+        .localCheckpoint(true) // verify size side + the index append
     val prefStored = readData(spark, dataPath(dir, "prefix", ep), "tb",
         Some(tokBuckets))
       .withColumn("is_old", lit(true))
     val prefAll = prefStored
       .unionByName(prefNew.withColumn("is_old", lit(false)))
-    val eff = prof("ingest.valve")(resolveBands(bands,
+    val eff = resolveBands(bands,
       incrementalBands(spark, dir, ep, prefNew, szNew, tokBuckets,
-        budgetBytes)))
-    val cands = prof("ingest.candidates")(
-      candidatesOf(prefNew, prefAll, tn, td, eff))
+        budgetBytes))
+    val cands = candidatesOf(prefNew, prefAll, tn, td, eff)
     // candidate endpoints decide which doc buckets the verify reads:
     // batch endpoints resolve from eNew/szNew; stored endpoints live in
     // the candidate ids' buckets only — a zero-collision batch reads
     // (near) nothing from the two big stored frames
-    val candBuckets = prof("ingest.cand_buckets")(
+    val candBuckets =
       bucketsOf(cands.select(col("id_a").as("doc_id"))
-        .unionByName(cands.select(col("id_b").as("doc_id"))), "doc_id", b))
+        .unionByName(cands.select(col("id_b").as("doc_id"))), "doc_id", b)
     val postAll = readData(spark, dataPath(dir, "postings", ep), "db",
         Some(candBuckets))
       .unionByName(eNew)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** STATE RESCALE soak (r11, verdict item 3): Spark pins a stateful
@@ -47,19 +47,9 @@ object FunnelRescaleSoak {
     val p2 = args.drop(3).headOption.map(_.toInt).getOrElse(32)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val stateMb = sys.env.getOrElse("GRAFT_FUNNEL_STATE_MB", "2048")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", p1.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB", stateMb)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt,
+      FunnelSoak.rocksDbState(stateMb = Some(stateMb)) :+
+        ("spark.sql.shuffle.partitions" -> p1.toString): _*)
     import spark.implicits._
 
     val stages = Seq("view", "click", "purchase")

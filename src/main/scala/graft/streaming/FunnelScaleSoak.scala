@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** 10⁸-key funnel soak on DISK-BUDGETED RocksDB with a mid-replay kill
@@ -32,19 +32,8 @@ object FunnelScaleSoak {
     val batches = args.drop(1).headOption.map(_.toInt).getOrElse(50)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val stateMb = sys.env.getOrElse("GRAFT_FUNNEL_STATE_MB", "2048")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB", stateMb)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt,
+      FunnelSoak.rocksDbState(stateMb = Some(stateMb)): _*)
     import spark.implicits._
 
     val stages = Seq("view", "click", "purchase")

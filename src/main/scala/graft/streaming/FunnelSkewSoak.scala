@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** SKEWED-arrival funnel soak + the first LIVE TTL-eviction run (r10,
@@ -46,19 +46,8 @@ object FunnelSkewSoak {
     val stateMb = sys.env.getOrElse("GRAFT_FUNNEL_STATE_MB", "2048")
     val ttlMs = sys.env.get("GRAFT_FUNNEL_TTL_MS").map(_.toLong)
       .getOrElse(15000L)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      .config("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB", stateMb)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt,
+      FunnelSoak.rocksDbState(stateMb = Some(stateMb)): _*)
     import spark.implicits._
 
     val stages = Seq("view", "click", "purchase")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Production-cardinality soak for the T3 funnel state machine
@@ -28,19 +28,26 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * Usage: runMain graft.streaming.FunnelSoak [users] [batches]
   */
 object FunnelSoak {
+  /** The funnel soaks' state-store conf: RocksDB, with changelog
+    * checkpointing when `changelog`, and with block cache + memtables
+    * across all state partitions capped at `stateMb` when given. */
+  private[streaming] def rocksDbState(changelog: Boolean = true,
+      stateMb: Option[String] = None): Seq[(String, String)] = {
+    val p = "spark.sql.streaming.stateStore"
+    Seq(s"$p.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") ++
+      (if (changelog) Seq(s"$p.rocksdb.changelogCheckpointing.enabled" -> "true")
+       else Nil) ++
+      stateMb.toSeq.flatMap(mb => Seq(s"$p.rocksdb.boundedMemoryUsage" -> "true",
+        s"$p.rocksdb.maxMemoryUsageMB" -> mb))
+  }
+
   def main(args: Array[String]): Unit = {
     val users = args.headOption.map(_.toInt).getOrElse(1000000)
     val batches = args.drop(1).headOption.map(_.toInt).getOrElse(24)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt,
+      rocksDbState(changelog = false): _*)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
