@@ -94,7 +94,7 @@ object Bench {
 
   /** The failures as a JSON list of [entry, class, message] triples: at
     * most `limit` of them, each message cut to `msgChars`. */
-  private def failuresJson(limit: Int, msgChars: Int): String =
+  private[graft] def failuresJson(limit: Int, msgChars: Int): String =
     new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
       failures.synchronized(failures.toSeq).take(limit)
         .map { case (n, c, m) => Seq(n, c, m.take(msgChars)).asJava }.asJava)

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * Driver-boundedness is the CALLER's contract: both call sites gate on
   * the same measured byte estimate that gated the broadcast-join form
-  * (GRAFT_PPJOIN_BROADCAST_MB, default 256), so this holds exactly what
+  * (`SizeGate.PpjoinBroadcastBytes`), so this holds exactly what
   * the previous plan already held on the driver as a broadcast
   * relation. At scale the narrow exploded-join verify remains the
   * plan of record — unchanged.

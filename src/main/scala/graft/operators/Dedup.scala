@@ -319,20 +319,18 @@ object Dedup {
     // rounds — component = min member id either way, so the output is
     // identical; the win is ~15-20 scheduler round-trips for the small
     // root/pair graphs CcIndex and the dedup entries contract to. The
-    // probe + collect read the ALREADY-materialized edge checkpoint
-    // (never re-run the pair pipeline), and anything over the cap
-    // (GRAFT_CC_LOCAL_EDGES, default 1M symmetrized rows ≈ 16 MB —
-    // driver-bounded by construction) takes the distributed loop, so
-    // the at-scale path is chosen by measured size, not a constant.
-    val localCap = sys.props.get("graft.cc.local.edges")
-      .orElse(sys.env.get("GRAFT_CC_LOCAL_EDGES")).map(_.toLong)
-      .getOrElse(1000000L)
+    // bounded collect reads the ALREADY-materialized edge checkpoint
+    // (never re-runs the pair pipeline), and anything over
+    // SizeGate.CcSymmetrizedRows takes the distributed loop, so the
+    // at-scale path is chosen by measured size, not a constant.
     val longIds = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && localCap > 0 &&
-        edges.limit((2 * localCap + 1).toInt).count() <= 2 * localCap) {
-      val rows = edges.collect()
-      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
+    val localRows =
+      if (longIds) SizeGate.rowsIfBounded(edges, SizeGate.CcSymmetrizedRows)
+        .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+      else None
+    localRows match {
+      case Some(rows) =>
         val parent = new java.util.HashMap[Long, Long]()
         def find(x: Long): Long = {
           var r = x
@@ -354,7 +352,7 @@ object Dedup {
         val s = pairs.sparkSession
         import s.implicits._
         return out.toDF("id", "component")
-      }
+      case None =>
     }
     var labels = Lineage.truncate(
       edges.select(col("src").as("id")).distinct()
@@ -1151,8 +1149,8 @@ object Dedup {
       // unset → bands auto-size from the candidate-volume estimate vs
       // the disk budget (r7 judge item 3) — output is band-invariant,
       // so whichever plan runs is what the oracle certifies.
-      val bands = sys.env.get("GRAFT_PREFIX_BANDS").map(_.toInt).getOrElse(0)
-      prefixJoinPairs(Tables.documents(s, d), bands).orderBy("id_a", "id_b")
+      prefixJoinPairs(Tables.documents(s, d), PrefixIndex.envBands.getOrElse(0))
+        .orderBy("id_a", "id_b")
     },
 
     // L2i — INCREMENTAL prefix-index near-dup join (r8, the r9-seeded
@@ -1336,25 +1334,19 @@ object Dedup {
     // exploded form below shuffles |cands|·avgN verify rows — it never
     // OOMs (the 64× soak form) but at sf0.1 it moves ~21× more rows
     // than the candidate frame (measured 12-19 s of dd22's 42 s). When
-    // the WHOLE doc-token frame fits a broadcast budget
-    // (GRAFT_PPJOIN_BROADCAST_MB, default 256 — a ~320K-doc corpus at
-    // the measured ~170 B/doc estimate), the same |∩| is computed
-    // scan-locally against two broadcast hash relations instead: the
+    // the WHOLE doc-token frame fits SizeGate.PpjoinBroadcastBytes,
+    // the same |∩| is computed scan-locally against two broadcast hash
+    // relations instead: the
     // candidate pair frame is the ONLY thing shuffled, and the sizes
     // ride the same arrays (size(ws) ≡ sz.n by construction). Output is
     // identical either way — strategy choice is measured-size-driven,
     // exactly like AQE's broadcast decisions, so the plan that runs at
     // 100 TB (narrow, spill-safe) is decided by data, not by a constant
     // tuned for either scale.
-    // -Dgraft.ppjoin.broadcast.mb lets the spec force either path
-    // in-process; the env form is the operational knob
-    val bcastBudget = sys.props.get("graft.ppjoin.broadcast.mb")
-      .orElse(sys.env.get("GRAFT_PPJOIN_BROADCAST_MB")).map(_.toLong)
-      .getOrElse(256L) * (1L << 20)
     val wBytesEst = w.agg(coalesce(sum(aggregate(col("ws"), lit(0L),
         (acc, t) => acc + length(t).cast("long") + lit(16L)) + lit(64L)),
       lit(0L))).first().getLong(0)
-    val bcastVerify = wBytesEst * 4 <= bcastBudget
+    val bcastVerify = SizeGate.fits(wBytesEst * 4, SizeGate.PpjoinBroadcastBytes)
     // KERNEL VERIFY (r12, guide §3.1/§4): under the SAME measured-size
     // gate, intern the doc token sets driver-side (the bytes the
     // previous plan already held as two broadcast relations) and compute
@@ -1375,9 +1367,8 @@ object Dedup {
     // bands <= 0 → auto-size from the candidate-volume estimate against
     // the configured disk budget (default 64 GiB); explicit bands wins
     val effBands = if (bands > 0) bands
-      else autoPrefixBands(pref, sz,
-        sys.env.get("GRAFT_PREFIX_DISK_BUDGET_GB").map(_.toLong)
-          .getOrElse(64L) * (1L << 30), verifyFanout = !bcastVerify)
+      else autoPrefixBands(pref, sz, PrefixIndex.defaultBudget,
+        verifyFanout = !bcastVerify)
     def bandOut(b: Int): DataFrame = {
       val prefA0 =
         if (effBands == 1) pref

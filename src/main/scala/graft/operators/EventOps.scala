@@ -15,10 +15,10 @@ import org.apache.spark.sql.functions._
 object EventOps {
 
   /** The quantized Markov transition rows `(prev, next, p_e6)` collected
-    * to the driver when the checkpointed matrix fits a bounded cap
-    * (GRAFT_MARKOV_LOCAL_ROWS / -Dgraft.markov.local.rows, default
-    * 100k) — ev53/ev58/ev91's 8-round recurrences are exact integer
-    * algebra on a TYPE-VOCABULARY-sized frame (driver-bounded model
+    * to the driver when the checkpointed matrix fits
+    * [[SizeGate.MarkovLocalRows]] — ev53/ev58/ev91's 8-round
+    * recurrences are exact integer algebra on a TYPE-VOCABULARY-sized
+    * frame (driver-bounded model
     * state, the PQ-codebook class), and running them as Spark joins
     * costs ~8 scheduler round-trips per scenario on ≤25-row frames
     * (measured: 40 tiny joins = most of ev91's 9.9 s at sf0.1). None
@@ -26,14 +26,10 @@ object EventOps {
     * round loop, so scale is handled by measured size, not assumption.
     * Long division below mirrors Spark's `DIV` (truncation) exactly;
     * every operand in these recurrences is non-negative. */
-  private def collectedMatrix(m: DataFrame): Option[Seq[(String, String, Long)]] = {
-    val cap = sys.props.get("graft.markov.local.rows")
-      .orElse(sys.env.get("GRAFT_MARKOV_LOCAL_ROWS")).map(_.toLong)
-      .getOrElse(100000L)
-    if (cap <= 0 || m.limit(math.min(cap + 1, Int.MaxValue).toInt).count() > cap) None
-    else Some(m.select("prev", "next", "p_e6").collect().toSeq
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2))))
-  }
+  private def collectedMatrix(m: DataFrame): Option[Seq[(String, String, Long)]] =
+    SizeGate.rowsIfBounded(m.select("prev", "next", "p_e6"),
+        SizeGate.MarkovLocalRows)
+      .map(_.toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
 
   /** Eight rounds of the absorption recurrence a'(s) = R(s) +
     * ⌊Σ_{(s,n,p)∈Q, n∈dom(a)} p·a(n) / 10⁶⌋ over the collected matrix —

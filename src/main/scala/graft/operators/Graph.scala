@@ -1367,11 +1367,10 @@ object Graph {
       def es(mult: Int, add: Int) = docs.select(col("doc_id").as("src"),
         ((col("doc_id") * mult + add) % n).as("dst"))
       val e = es(7, 13).unionByName(es(3, 5))
-      // GRAFT_SCC_UNROLL: relaxations per driver round (A/B knob; output
-      // is unroll-invariant — SccSpec pins 1 ≡ 2 ≡ 4; default 2 won the
-      // r8 A/B: 11.1 → 9.6 s warm at sf0.1)
-      scc(e, unrollHops =
-          sys.env.get("GRAFT_SCC_UNROLL").map(_.toInt).getOrElse(2))
+      // 2 relaxations per driver round (output is unroll-invariant —
+      // SccSpec pins 1 ≡ 2 ≡ 4; 2 won the r8 A/B: 11.1 → 9.6 s warm at
+      // sf0.1)
+      scc(e, unrollHops = 2)
         .groupBy("scc_id").agg(count(lit(1)).as("size"))
         .groupBy("size").agg(count(lit(1)).as("n_components"),
           min(col("scc_id")).as("min_scc_id"))

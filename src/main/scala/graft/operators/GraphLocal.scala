@@ -19,32 +19,17 @@ import org.apache.spark.sql.types._
   * only under a measured size cap. Anything over the cap (or with
   * non-long ids) runs the unchanged distributed loops — the 100 TB
   * path is decided by data, not by a constant (the dd5/ev53 r12
-  * pattern, extended to the whole family).
-  *
-  * Cap: `graft.graph.local.edges` sysprop (spec hook), else
-  * `GRAFT_GRAPH_LOCAL_EDGES`, default 1M collected edge rows ≈ 16 MB —
-  * the same driver-bounded model-state class as the CC union-find and
-  * the Markov matrices.
+  * pattern, extended to the whole family). The cap and the probe are
+  * [[SizeGate.GraphLocalRows]] and [[SizeGate.rowsIfBounded]].
   */
 private[operators] object GraphLocal {
 
-  def cap: Long = sys.props.get("graft.graph.local.edges")
-    .orElse(sys.env.get("GRAFT_GRAPH_LOCAL_EDGES")).map(_.toLong)
-    .getOrElse(1000000L)
-
-  private def allLong(df: DataFrame): Boolean =
-    df.schema.fields.forall(_.dataType == LongType)
-
   /** Collect an ALREADY-MATERIALIZED (checkpointed) frame of long
-    * columns if it holds ≤ cap rows: one take(cap+1) job — the probe IS
-    * the collect. None ⇒ over cap / non-long ⇒ caller keeps the
-    * distributed loop. */
-  def rowsIfBounded(df: DataFrame): Option[Array[Row]] = {
-    val c = cap
-    if (c <= 0 || c > Int.MaxValue - 1 || !allLong(df)) return None
-    val rows = df.take(c.toInt + 1)
-    if (rows.length > c) None else Some(rows)
-  }
+    * columns under the graph cap. None ⇒ over cap / non-long / forced
+    * at scale ⇒ caller keeps the distributed loop. */
+  def rowsIfBounded(df: DataFrame): Option[Array[Row]] =
+    if (!df.schema.fields.forall(_.dataType == LongType)) None
+    else SizeGate.rowsIfBounded(df, SizeGate.GraphLocalRows)
 
   def pairs(rows: Array[Row]): Array[(Long, Long)] =
     rows.map(r => (r.getLong(0), r.getLong(1)))

@@ -146,9 +146,14 @@ import org.apache.spark.sql.functions._
   */
 object PrefixIndex {
 
-  private def defaultBudget: Long =
+  /** The verify's spill budget: `GRAFT_PREFIX_DISK_BUDGET_GB`, default 64. */
+  private[graft] def defaultBudget: Long =
     sys.env.get("GRAFT_PREFIX_DISK_BUDGET_GB").map(_.toLong)
       .getOrElse(64L) * (1L << 30)
+
+  /** A forced band count: `GRAFT_PREFIX_BANDS`, else auto-sized. */
+  private[graft] def envBands: Option[Int] =
+    sys.env.get("GRAFT_PREFIX_BANDS").map(_.toInt)
 
   /** Run independent index-dir writes concurrently (guide §2.6 —
     * overlap independent jobs): each pre-marker write is a tiny bounded
@@ -748,9 +753,9 @@ object PrefixIndex {
     val post = postings.dropDuplicates("doc_id", "tok")
     // SIZE-ADAPTIVE VERIFY (r12 — the dd22/prefixJoinPairsAt discipline
     // applied to the index path): when the docs this verify can touch
-    // (the candidate-bucket-pruned postings read + the batch) fit a
-    // broadcast budget, |∩| is computed scan-locally against two
-    // broadcast (doc → token set) relations instead of the ×avgN
+    // (the candidate-bucket-pruned postings read + the batch) fit
+    // SizeGate.PpjoinBroadcastBytes, |∩| is computed scan-locally
+    // against two broadcast (doc → token set) relations instead of the ×avgN
     // exploded join — the candidate pair frame stays the only shuffled
     // thing. `inter` is unchanged: post is dup-free, so join-match
     // count ≡ |array_intersect| of the collected sets (order-invariant,
@@ -758,13 +763,10 @@ object PrefixIndex {
     // output). Sizes still come from the persisted sizes frame. The
     // estimate action is bounded by the same pruned read the verify
     // join scans anyway (the valve-estimate precedent).
-    val bcastBudget = sys.props.get("graft.ppjoin.broadcast.mb")
-      .orElse(sys.env.get("GRAFT_PPJOIN_BROADCAST_MB")).map(_.toLong)
-      .getOrElse(256L) * (1L << 20)
     val postBytesEst =
       post.agg(coalesce(sum(length(col("tok")) + lit(16L)), lit(0L)))
         .first().getLong(0)
-    val bcastVerify = postBytesEst * 4 <= bcastBudget
+    val bcastVerify = SizeGate.fits(postBytesEst * 4, SizeGate.PpjoinBroadcastBytes)
     lazy val docSets =
       post.groupBy("doc_id").agg(collect_set(col("tok")).as("ws"))
     // KERNEL VERIFY (r12 — the dd22/prefixJoinPairsAt kernel applied to
@@ -905,7 +907,7 @@ object PrefixIndex {
 
   private def resolveBands(bands: Int, estimate: => Int): Int =
     if (bands > 0) bands
-    else sys.env.get("GRAFT_PREFIX_BANDS").map(_.toInt).getOrElse(estimate)
+    else envBands.getOrElse(estimate)
 
   /** Ingest a batch against the stored index: returns exactly the
     * pairs with ≥ 1 endpoint in `newDocs` (old×old pairs were reported

@@ -8,11 +8,13 @@ import org.apache.spark.sql.functions._
   * MemoryStream soak): at 10⁸ users the replay itself (3×10⁸ events)
   * no longer fits a driver-held MemoryStream, so the source is a FILE
   * stream — each rate-limited micro-batch is a parquet append the
-  * query discovers through the FileStreamSource seen-files log, which
-  * is exactly the production shape (landing-dir ingestion) AND gives
-  * the same in-flight-offsets kill semantics: the kill batch is
-  * written but never processed by run 1, and run 2 must drain it from
-  * the checkpoint's offset log.
+  * query discovers through the FileStreamSource seen-files log — the
+  * production shape (landing-dir ingestion). The kill: run 1 stops
+  * after the first half of the replay, and the kill batch lands in the
+  * landing dir only after that stop returns, i.e. while no query runs.
+  * Run 2 restarts on the same checkpoint (restored RocksDB state and
+  * seen-files log) and must pick the kill batch up as unseen files,
+  * then finish the replay.
   *
   * DISK-BUDGETED STATE: `boundedMemoryUsage=true` with
   * `maxMemoryUsageMB` (env GRAFT_FUNNEL_STATE_MB, default 2048) caps
@@ -124,12 +126,12 @@ object FunnelScaleSoak {
       sample(q1)
       off = hi; b += 1
     }
-    // the KILL: one more batch lands but is never processed by q1 — the
-    // stop leaves its files undiscovered, exactly a driver loss mid-replay
+    // the KILL: stop q1, then land one more batch while no query runs,
+    // so q1 cannot have consumed it — the work is genuinely in flight
+    q1.stop()
     val hiKill = math.min(off + perBatch, totalEvents)
     writeBatch(off, hiKill)
     off = hiKill; b += 1
-    q1.stop()
     Thread.sleep(3000) // drain async listener events before reading
     val inFlight = off - processedRows.get() // written - processed by run 1
     val wall1 = (System.nanoTime() - t0) / 1e9
@@ -140,7 +142,7 @@ object FunnelScaleSoak {
     // ---- run 2: resume on the SAME checkpoint, drain + finish ---------
     val t1 = System.nanoTime()
     val q2 = start()
-    q2.processAllAvailable() // drain the in-flight kill batch
+    q2.processAllAvailable() // pick up the kill batch written while down
     sample(q2)
     while (off < totalEvents) {
       val hi = math.min(off + perBatch, totalEvents)

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, SizeGate}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Planted-duplicate recall checks for the non-SQL-expressible dedup
@@ -131,13 +132,15 @@ class DedupSpec extends SparkSpecBase {
       Seq((205L, 300L)) ++ (300L until 310L).map(i => (i, 300L + (i + 1) % 10))
     val pairs = (chain ++ star ++ rings ++ Seq((400L, 401L), (500L, 501L)))
       .toDF("id_a", "id_b")
-    def run(): Seq[(Long, Long)] = Dedup.connectedComponents(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val local = run() // default cap: the bounded set takes the local path
-    val prop = "graft.cc.local.edges"
-    System.setProperty(prop, "0") // force the distributed rounds
-    try assert(run() === local, "local union-find diverged from distributed CC")
-    finally System.clearProperty(prop)
+    def run(): (DataFrame, Seq[(Long, Long)]) = {
+      val df = Dedup.connectedComponents(pairs)
+      (df, df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    }
+    val (localDf, local) = run() // default cap: the bounded set takes the local path
+    val (distDf, dist) = SizeGate.atScale(run()) // force the distributed rounds
+    assert(driverLocal(localDf) && !driverLocal(distDf),
+      "each run must take its own branch")
+    assert(dist === local, "local union-find diverged from distributed CC")
     // canonical min-member labels on the known shapes
     assert(local.toMap.apply(40L) === 0L)   // chain collapses to 0
     assert(local.toMap.apply(120L) === 100L) // star root labels to min leaf

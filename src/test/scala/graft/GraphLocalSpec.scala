@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Graph
+import graft.operators.{Graph, SizeGate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -8,21 +8,28 @@ import org.apache.spark.sql.functions._
   * distributed loops BIT FOR BIT on adversarial shapes: the local path
   * is a pure plan substitution under a measured cap, so any divergence
   * is a correctness bug, not a tuning choice. Each case runs the SAME
-  * operator twice — cap forced to 0 (distributed) vs default (local) —
-  * and compares the full sorted output. Shapes stress the known hazard
-  * classes: multi-SCC chains + self-loops (scc), dangling mass +
-  * disconnected pieces (pageRank/HITS), tie-breaks (LPA/Louvain),
-  * unreachable pivots + deep layers (betweenness/harmonic), mutual-pair
-  * contraction (MST).
+  * operator twice — under SizeGate.atScale (distributed) vs default
+  * (local) — checks that each run took its branch, and compares the
+  * full sorted output. Shapes stress the known hazard classes:
+  * multi-SCC chains + self-loops (scc), dangling mass + disconnected
+  * pieces (pageRank/HITS), tie-breaks (LPA/Louvain), unreachable
+  * pivots + deep layers (betweenness/harmonic), mutual-pair contraction
+  * (MST). The Markov entries (ev53/ev58/ev91) run the same harness on
+  * the sf0.001 catalog data: their driver recurrence vs their
+  * distributed rounds.
   */
 class GraphLocalSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def both(f: => DataFrame): (Seq[String], Seq[String]) = {
-    System.setProperty("graft.graph.local.edges", "0")
-    val dist = try f.collect().map(_.toString).toSeq.sorted
-      finally System.clearProperty("graft.graph.local.edges")
-    val local = f.collect().map(_.toString).toSeq.sorted
+    def run(): (DataFrame, Seq[String]) = {
+      val df = f
+      (df, df.collect().map(_.toString).toSeq.sorted)
+    }
+    val (distDf, dist) = SizeGate.atScale(run())
+    val (localDf, local) = run()
+    assert(!driverLocal(distDf), "the at-scale run took a driver-local branch")
+    assert(driverLocal(localDf), "the default run took the distributed branch")
     (dist, local)
   }
 
@@ -93,4 +100,9 @@ class GraphLocalSpec extends SparkSpecBase {
     ).toDF("u", "v", "w")
     assertSame(Graph.mstBoruvka(weighted))
   }
+
+  for (name <- Seq("ev53_markov_steady", "ev58_absorption", "ev91_markov_removal"))
+    test(s"$name: local recurrence == distributed rounds at sf0.001") {
+      assertSame(SparkEntry.queries(name)(spark, sf0001))
+    }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, PrefixIndex}
+import graft.operators.{Dedup, PrefixIndex, SizeGate}
 import org.apache.spark.sql.functions._
 
 /** The durable incremental prefix index (dd24's engine): multi-batch
@@ -140,14 +140,13 @@ class PrefixIndexSpec extends SparkSpecBase {
       .createTempDirectory("prefix_index_plan").toString
     PrefixIndex.build(b1, dir)
     // the pin's subject is the AT-SCALE plan — force the narrow verify
-    // (broadcast budget 0, the documented spec hook); the r12 kernel
-    // verify replaces this plan only under the measured small-corpus
-    // gate, and its output equality is pinned below
-    System.setProperty("graft.ppjoin.broadcast.mb", "0")
-    val pairs = try {
+    // (SizeGate.atScale); the r12 kernel verify replaces this plan only
+    // under the measured small-corpus gate, and its output equality is
+    // pinned below
+    val pairs = SizeGate.atScale {
       PrefixIndex.ingestPairs(b2, dir, 4, 5, bands = 1,
         budgetBytes = Long.MaxValue)._1
-    } finally System.clearProperty("graft.ppjoin.broadcast.mb")
+    }
     val plan = pairs.queryExecution.optimizedPlan
     val aggs = plan.collect { case a: Aggregate => a }
     assert(aggs.nonEmpty, "the verify must aggregate (dedup + inter)")
@@ -356,15 +355,14 @@ class PrefixIndexSpec extends SparkSpecBase {
       assert(totalBuckets >= 32, s"expected a populated bucket layout, got $totalBuckets")
       // tiny batch: near-dups exactly one stored doc → ONE candidate.
       // The pin's subject is the AT-SCALE pruned-scan plan — force the
-      // narrow verify (broadcast budget 0); the r12 kernel verify reads
+      // narrow verify (SizeGate.atScale); the r12 kernel verify reads
       // the SAME bucket-pruned postings frame through its map-build
       // collect, and its output equality is pinned below.
       val b2 = Seq((1000L, "w7a w7b w7c w7d")).toDF("doc_id", "text")
-      System.setProperty("graft.ppjoin.broadcast.mb", "0")
-      val pairs = try {
+      val pairs = SizeGate.atScale {
         PrefixIndex.ingestPairs(b2, dir, 4, 5, bands = 1,
           budgetBytes = Long.MaxValue)._1
-      } finally System.clearProperty("graft.ppjoin.broadcast.mb")
+      }
       (pairs, totalBuckets)
     } finally System.clearProperty("graft.prefix.buckets")
     def scans(p: org.apache.spark.sql.execution.SparkPlan) = p.collect {

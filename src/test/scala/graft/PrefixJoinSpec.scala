@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.Dedup
+import graft.functions.PairIntersectExpr
+import graft.operators.{Dedup, SizeGate}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** dd22's PPJoin engine: band-sharding is an execution knob, not a
@@ -97,15 +99,15 @@ class PrefixJoinSpec extends SparkSpecBase {
 
   test("broadcast verify equals narrow exploded verify exactly " +
     "(the r12 size-adaptive strategy is a plan knob, not a semantics knob)") {
-    // force the narrow path via the in-process form of the budget knob,
-    // then restore — the default-path `single` above runs broadcast
-    val prop = "graft.ppjoin.broadcast.mb"
-    System.setProperty(prop, "0")
-    try {
-      val narrow = Dedup.prefixJoinPairs(docs)
-        .collect().map(key).sortBy(identity).toSeq
-      assert(narrow === single, "narrow verify diverged from broadcast verify")
-    } finally System.clearProperty(prop)
+    // force the narrow path — the default-path `single` above runs the
+    // kernel verify over the broadcast token sets
+    def kernelVerify(df: DataFrame): Boolean = df.queryExecution.analyzed
+      .exists(_.expressions.exists(_.exists(_.isInstanceOf[PairIntersectExpr])))
+    assert(kernelVerify(Dedup.prefixJoinPairs(docs)))
+    val narrowDf = SizeGate.atScale(Dedup.prefixJoinPairs(docs))
+    assert(!kernelVerify(narrowDf), "the at-scale run took the kernel verify")
+    val narrow = narrowDf.collect().map(key).sortBy(identity).toSeq
+    assert(narrow === single, "narrow verify diverged from broadcast verify")
   }
 
   test("sf0.001 corpus auto-sizes to a single pass at the default budget " +

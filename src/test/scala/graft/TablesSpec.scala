@@ -1,15 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.GraftSparkAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.TimestampType
 
@@ -19,21 +16,6 @@ import org.apache.spark.sql.types.TimestampType
   */
 class TablesSpec extends SparkSpecBase {
   import spark.implicits._
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftSparkAccess.flushListeners(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      GraftSparkAccess.flushListeners(spark.sparkContext)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   test("a repeated Tables.lineitem call runs zero Spark jobs") {
     Tables.lineitem(spark, sf0001).schema

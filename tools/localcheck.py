@@ -9,7 +9,9 @@ Expects `outDir` to already hold Verify's output (run e.g.
 first). For every query with an oracle in oracle_sql.json, runs the SQL
 in DuckDB over views named after the sfDir parquet tables and compares
 row count, sorted-by-name schema, and the value hash of row-sorted,
-column-sorted data — the driver's contract.
+column-sorted data — the driver's contract. A requested query with no
+oracle prints `NO ORACLE`; one with neither an oracle nor an output dir
+prints `UNKNOWN` and fails.
 """
 import sys, os, json, glob
 import duckdb
@@ -27,6 +29,13 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     fails = 0
+    # a requested name must not pass by being skipped: no oracle is
+    # reported, and neither an oracle nor an output dir is a failure
+    for name in sorted(only - oracles.keys()):
+        if os.path.isdir(os.path.join(out_dir, name)):
+            print(f"{name}: NO ORACLE")
+        else:
+            print(f"{name}: UNKNOWN"); fails += 1
     for name, sql in sorted(oracles.items()):
         if only and name not in only:
             continue
