@@ -5,7 +5,16 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extensions registering graft's native Catalyst functions.
+/** Session extensions: graft's native Catalyst functions, its plan
+  * rules and its planner strategy.
+  *
+  *  - functions: `vec_dot`, `topk_pairs`, `bloom_agg`, `bloom_contains`,
+  *    `asof_match`, `jaro_winkler`, `deflate_len`;
+  *  - optimizer rules: [[graft.plans.RewriteWindowTopK]] and
+  *    [[graft.plans.RewriteToMv]];
+  *  - resolution rule: [[graft.sources.v2.ResolveGraftUpdate]];
+  *  - planner strategy: [[graft.plans.AsOfJoinStrategy]];
+  *  - AQE query-stage prep rule: [[graft.plans.SmallSort]].
   *
   * [[GraftSession.local]] installs them; elsewhere pass
   * `--conf spark.sql.extensions=graft.GraftExtensions`. Once injected,
@@ -79,6 +88,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) =>
         graft.plans.AsOfMatch(children.head, children(1), children(2), children(3))))
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    // A global sort whose measured input fits SizeGate's sort cap runs
+    // in one partition instead of behind a sampled range exchange (see
+    // graft.plans.SmallSort). AQE plans only.
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallSort)
     // Record-linkage scorer: runs inside the blocked candidate join's
     // generated code (see graft.functions.StringSim).
     ext.injectFunction((

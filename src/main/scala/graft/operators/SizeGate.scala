@@ -5,18 +5,18 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** The one local-vs-distributed decision. Each size-adaptive operator
-  * has a driver-local fast path and a distributed at-scale path with
-  * the same output; it takes the local path only when a MEASURED size
+  * has a local fast path (on the driver, or in one partition) and a
+  * distributed at-scale path with the same output; it takes the local
+  * path only when a MEASURED size
   * fits its cap below, so the path that runs at 100 TB is chosen by
   * data, not by a constant tuned for either scale.
   *
   * The row gates measure with [[rowsIfBounded]]: one bounded `take`
-  * whose rows ARE the collect, so nothing is read twice. That is not
-  * one Spark job on a multi-partition frame under the cap:
-  * `executeTake` scans 1 partition, then up to
-  * `spark.sql.limit.scaleUpFactor` (4) times as many per job, so it
-  * costs about 1 + log4(partitions) jobs — 3 on 8 partitions, measured
-  * by SizeGateSpec.
+  * whose rows ARE the collect, so nothing is read twice. It runs as one
+  * task over the coalesced frame, so it is one Spark job however many
+  * partitions the frame has (a plain `take` scales 1 → 4× partitions
+  * per job: 3 jobs on 8 partitions). The sort gate measures the input
+  * bytes of a global sort's pipeline ([[graft.plans.SmallSort]]).
   *
   * One switch forces every gate to its at-scale branch: the env var
   * `GRAFT_SIZE_GATE=at_scale` for a whole JVM (a forked `runMain
@@ -34,6 +34,10 @@ private[graft] object SizeGate {
   /** dd22 and [[PrefixIndex]] kernel verify: 4× the estimated
     * doc-token bytes (≈ 320K docs at ~170 B/doc). */
   final val PpjoinBroadcastBytes: Long = 256L << 20
+  /** [[graft.plans.SmallSort]]: a global sort's input bytes (files
+    * selected, or materialized stage sizes), sorted in one partition
+    * without a range exchange; AQE's default advisory partition size. */
+  final val SortOnePartitionBytes: Long = 64L << 20
 
   private val forcedByEnv: Boolean = sys.env.get("GRAFT_SIZE_GATE") match {
     case None | Some("") => false
@@ -57,7 +61,7 @@ private[graft] object SizeGate {
   def rowsIfBounded(df: DataFrame, cap: Int): Option[Array[Row]] =
     if (forced) None
     else {
-      val rows = df.take(cap + 1)
+      val rows = df.coalesce(1).take(cap + 1)
       if (fits(rows.length, cap)) Some(rows) else None
     }
 

@@ -21,10 +21,10 @@ class SizeGateSpec extends SparkSpecBase {
   }
 
   test("rowsIfBounded: all rows under the cap in one bounded take, " +
-    "3 jobs on 8 partitions; None over the cap or at scale, with no job") {
+    "1 job on 8 partitions; None over the cap or at scale, with no job") {
     val df = spark.range(0, 800, 1, 8).toDF().localCheckpoint(true)
     var rows: Option[Array[Row]] = None
-    assert(jobsDuring { rows = SizeGate.rowsIfBounded(df, 1000) } === 3)
+    assert(jobsDuring { rows = SizeGate.rowsIfBounded(df, 1000) } === 1)
     assert(rows.map(_.map(_.getLong(0)).sorted.toSeq) === Some(0L until 800L))
     assert(SizeGate.rowsIfBounded(df, 800).isDefined)
     assert(SizeGate.rowsIfBounded(df, 799).isEmpty)
