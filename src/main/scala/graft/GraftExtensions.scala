@@ -10,8 +10,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   *  - functions: `vec_dot`, `topk_pairs`, `bloom_agg`, `bloom_contains`,
   *    `asof_match`, `jaro_winkler`, `deflate_len`;
-  *  - optimizer rules: [[graft.plans.RewriteWindowTopK]] and
-  *    [[graft.plans.RewriteToMv]];
+  *  - optimizer rules: [[graft.plans.RewriteWindowTopK]],
+  *    [[graft.plans.RewriteToMv]] and [[graft.plans.RewriteRound]]
+  *    (scale-0 `round` over a double on the exact kernel
+  *    [[graft.functions.ExactRoundExpr]]; always on, no toggle);
   *  - resolution rule: [[graft.sources.v2.ResolveGraftUpdate]];
   *  - planner strategy: [[graft.plans.AsOfJoinStrategy]];
   *  - AQE query-stage prep rule: [[graft.plans.SmallSort]].
@@ -75,6 +77,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // graft.plans.RewriteToMv). No-op while the MV registry is empty.
     // Toggle: spark.graft.mvRewrite.enabled (default on).
     ext.injectOptimizerRule(_ => graft.plans.RewriteToMv)
+    // Spark's scale-0 round over a double (every money sum's per-row
+    // round) runs on an exact kernel that returns the same bits without
+    // a BigDecimal per row (see graft.plans.RewriteRound). Injected
+    // after RewriteToMv so MV matching sees the original expression.
+    // No toggle: the rewrite changes no answer.
+    ext.injectOptimizerRule(_ => graft.plans.RewriteRound)
     // Whole-operator physical extension: `left.join(right,
     // asof_match(lk, rk, lt, rt), "left")` plans as the partitioned
     // sort-merge AsOfJoinExec (see graft.plans.AsOfJoinExec). The marker

@@ -14,6 +14,10 @@ import org.apache.spark.sql.functions._
   * final division is a single deterministic FP op. The DuckDB oracle uses
   * the same formula: `CAST(sum(CAST(round(x*10^s) AS BIGINT)) AS
   * DOUBLE)/10^s`.
+  *
+  * The per-row `round` runs on the exact kernel [[ExactRound]]:
+  * [[graft.plans.RewriteRound]] swaps it in for Spark's `BigDecimal`
+  * round at optimization, with the same bits.
   */
 object Stable {
   /** Exact sum of a fixed-point column (default cents). */

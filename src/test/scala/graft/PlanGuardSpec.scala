@@ -210,4 +210,47 @@ class PlanGuardSpec extends SparkSpecBase {
       case (k, None)    => conf.unset(k)
     }
   }
+
+  /** Spark's `round`/`bround` expressions left in the optimized plan
+    * (subqueries included) as `name(input type, scale)`, and the number
+    * of `exact_round` kernels. */
+  private def rounds(df: org.apache.spark.sql.DataFrame): (Seq[String], Int) = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RoundBase}
+    val es: Seq[Expression] = df.queryExecution.optimizedPlan
+      .collectWithSubqueries { case p => p.expressions }.flatten.flatMap(_.collect { case e => e })
+    val kept = es.collect {
+      case r: RoundBase => s"${r.prettyName}(${r.left.dataType.simpleString}, ${r.right})"
+    }
+    (kept, es.count(_.isInstanceOf[graft.functions.ExactRoundExpr]))
+  }
+
+  test("q01, q06, q07 and q17 round their money on the exact kernel, not Spark's round") {
+    for (q <- Seq("q01_agg", "q06_broadcast_join", "q07_star_join", "q17_having")) {
+      val (kept, kernels) = rounds(SparkEntry.queries(q)(spark, sf0001))
+      assert(kernels > 0, s"$q: no exact_round in the optimized plan")
+      assert(kept.isEmpty, s"$q keeps Spark's round: $kept")
+    }
+  }
+
+  test("SQL round(x) over a double is rewritten; scaled, bround, float, decimal and bigint rounds are not") {
+    val li = s"parquet.`$sf0001/lineitem.parquet`"
+    val df = spark.sql(
+      s"""SELECT round(l_extendedprice) AS r0, l_extendedprice AS x,
+         |  round(l_extendedprice, 2) AS r2, bround(l_extendedprice) AS b0,
+         |  round(CAST(l_extendedprice AS FLOAT)) AS f0,
+         |  round(CAST(l_extendedprice AS DECIMAL(12, 2))) AS d0,
+         |  round(l_orderkey) AS k0
+         |FROM $li""".stripMargin)
+    val (kept, kernels) = rounds(df)
+    assert(kernels == 1, s"expected one exact_round, got $kernels")
+    assert(kept.sorted == Seq("bround(double, 0)", "round(bigint, 0)",
+      "round(decimal(12,2), 0)", "round(double, 2)", "round(float, 0)"), kept)
+    val rows = df.select("r0", "x").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val want = java.math.BigDecimal.valueOf(r.getDouble(1))
+        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
+      assert(r.getDouble(0) == want, s"round(${r.getDouble(1)})")
+    }
+  }
 }
