@@ -464,8 +464,8 @@ object EventStream {
     * more partitions — the operational move is: drain the old query,
     * REBUILD its in-progress state offline (batch-replay the landing
     * dir through [[foldFunnel]] — the same transition function, so the
-    * rebuilt state is exactly what the live query held; see
-    * [[graft.streaming.FunnelRescaleSoak]]), and start a FRESH query
+    * rebuilt state is exactly what the live query held; see the
+    * `rescale` mode of [[graft.streaming.FunnelSoak]]), and start a FRESH query
     * (new checkpoint, new partition count) seeded with that state via
     * flatMapGroupsWithState's initialState. Completed funnels reset to
     * stage 0 and hold no state, so the rebuild carries exactly the

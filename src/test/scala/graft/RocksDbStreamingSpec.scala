@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.EventStream
+import graft.streaming.{EventStream, FunnelSoak}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
@@ -218,5 +218,68 @@ class RocksDbStreamingSpec extends SparkSpecBase {
       assert(m === Seq((7L, 3)),
         "the in-progress attempt must survive the batch seam in RocksDB state")
     }
+  }
+
+  /** A [[FunnelSoak]] mode at spec size on a fresh session of the shared
+    * one, so the soak's RocksDB, memory-bound and partition confs stay
+    * on that session. */
+  private def soak(mode: String, args: Long*): FunnelSoak.Result = {
+    val r = FunnelSoak.run(spark.newSession(), mode, args.map(_.toString),
+      stateMb = "256", ttlMs = 2000L)
+    assert(r.ok, r.lines.mkString("\n"))
+    r
+  }
+
+  /** Completions reconcile exactly: `users` rows over `users` keys. */
+  private def assertExact(l: FunnelSoak.Line, users: Long,
+      totalKey: String = "completed_total"): Unit =
+    assert(l(totalKey) == users && l("distinct_users") == users &&
+      l("lost") == 0L && l("duplicated") == 0L, l)
+
+  test("FunnelSoak base: every user completes exactly once with state at " +
+    "its peak of one row per user") {
+    val l = soak("base", 2000, 4)("FUNNEL_SOAK")
+    assert(l("completed") == 2000L && l("expected") == 2000L &&
+      l("distinct_users") == 2000L && l("peak_state_rows") == 2000L, l)
+  }
+
+  test("FunnelSoak recovery: the kill batch is in flight at the stop, and " +
+    "the resume on the changelog loses and duplicates nothing") {
+    val l = soak("recovery", 2000, 4)("FUNNEL_RECOVERY")
+    assertExact(l, 2000L)
+    // 6000 events in 4 batches: run 1 sees 2, the kill batch is the 3rd
+    assert(l("in_flight_events_at_kill") == 1500L &&
+      l("changelog_files") == true, l)
+  }
+
+  test("FunnelSoak scale: on a landing dir, the resumed query picks the " +
+    "kill batch up as unseen files and reconciles exactly") {
+    val l = soak("scale", 2000, 4)("FUNNEL_SCALE")
+    assertExact(l, 2000L)
+    assert(l("in_flight_events_at_kill") == 1500L &&
+      l("changelog_files") == true && l("state_budget_mb") == "256", l)
+  }
+
+  test("FunnelSoak skew: exact per-key multiplicity under skewed arrival, " +
+    "abandoners held in state, then evicted by a live TTL") {
+    val r = soak("skew", 2000, 4, 20, 100)
+    val a = r("FUNNEL_SKEW")
+    // 2000 cold users once each, 20 hot users once per batch
+    assert(a("completed_total") == 2080L && a("distinct_users") == 2020L &&
+      a("hot_exact_multiplicity") == 20L && a("cold_exact_once") == 2000L &&
+      a("final_state_rows") == 100L, a)
+    val b = r("FUNNEL_TTL")
+    assert(b("fast_completions") == 1000L && b("peak_state_rows") == 100L &&
+      b("final_state_rows") == 0L, b)
+  }
+
+  test("FunnelSoak rescale: state rebuilt offline seeds a query on a new " +
+    "partition count, and both phases reconcile exactly") {
+    val l = soak("rescale", 2000, 4, 2, 4)("FUNNEL_RESCALE")
+    assertExact(l, 2000L, totalKey = "total")
+    // the handoff at 3 of 4 batches: 500 purchases landed in phase 1
+    assert(l("state_partitions_phase1") == 2 && l("state_partitions_phase2") == 4 &&
+      l("completed_phase1") == 500L && l("completed_phase2") == 1500L &&
+      l("rebuilt_state_rows") == 1500L, l)
   }
 }

@@ -164,7 +164,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("T3 funnelFrom: a drained query's state rebuilt offline via " +
     "foldFunnel and seeded through initialState completes cross-phase " +
-    "funnels exactly (r11 rescale path; soak: FunnelRescaleSoak)") {
+    "funnels exactly (r11 rescale path; soak: FunnelSoak rescale)") {
     implicit val sqlCtx = spark.sqlContext
     val stages = Seq("view", "click", "purchase")
     // phase 1: user 1 completed; user 2 mid-funnel; user 3 just started
