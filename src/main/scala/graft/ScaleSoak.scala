@@ -3,37 +3,42 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** 8×→64× scale soak (VERDICT r4 item 2): materializes a REPLICATED sf
-  * directory and times the top wall-time CATALOG ENTRIES end-to-end at
-  * the given replication, so the 100 TB linearity claims rest on two
-  * octaves of evidence instead of one. Usage:
-  *   runMain graft.ScaleSoak [rep] [sfDir]
+/** The scale replica: a REPLICATED sf directory and the catalog entries
+  * whose 1× → N× growth is SURVEY §6's linearity read-out. Usage:
+  *   runMain graft.ScaleSoak [rep=8] [sfDir=the bench-scale sf0.1]
+  * materializes the replica and prints its dir and the comma-joined
+  * [[entries]]. The entries run through the catalog's own mains, so
+  * every scaled answer is checked the same way as at catalog scale:
+  * `SPARK_GRAFT_ONLY=<entries> Verify <dir> <out>` at two thread counts,
+  * then `tools/localcheck.py` (DuckDB oracle) and `tools/samecheck.py`;
+  * `SPARK_GRAFT_SF_DIR=<dir> SPARK_GRAFT_ONLY=<entries> Bench` times
+  * each entry (noop sink) at 1× and N×.
   *
   * Replication model — "the corpus GREW", not "the corpus was copied":
   *  - documents: ids shifted AND every token suffixed per replica, so
   *    replicas are new content (no cross-replica dup structure; each
-  *    replica carries the original's internal dup structure). The
-  *    hot-bucket saturated cases (everything-is-a-dup) stay covered by
-  *    ScaleProbe's dedicated shapes — this soak measures organic growth.
+  *    replica carries the original's internal dup structure). Saturated
+  *    everything-is-a-dup inputs are not modelled.
   *  - embeddings: ids shifted, vectors epsilon-shifted per replica (constant per-component offset)
   *    (deterministic), so ANN corpus cardinality really grows.
-  *  - events/orders/lineitem: key-shifted copies (ScaleProbe's model).
+  *  - events/orders/lineitem: key-shifted copies (event_id/user_id,
+  *    o_orderkey, l_orderkey), so per-user and per-order shapes repeat
+  *    while per-customer and per-part histories grow ×rep.
   *  - dims (nation/region/customer/supplier/part): copied as-is — dims
-  *    stay dim-sized at scale.
+  *    stay dim-sized at scale, so an entry over dims alone reads flat.
   *
-  * Graph entries with data-dependent ROUND counts (gr14 SCC, gr15
-  * betweenness) are probed in ScaleProbe with block-local replication
-  * (same structure per block); here we time the fixed-round families
-  * (HITS, Louvain, PageRank) whose per-round cost is |E|-linear but
-  * whose graph SHAPE legitimately changes with n — wall per octave is
-  * still the linearity readout.
+  * The graph entries' formula edges `(doc_id·k + c) % n` assume dense
+  * ids. At 8× of sf0.1 the 10⁷ id shift is a multiple of n = 40000, so
+  * every copy's edges land on the same targets, most of them no
+  * document: their 8× answers are checked, but their walls time that
+  * graph, not a grown one.
   */
 object ScaleSoak {
 
   /** Materialize (once — `_done`-marker cached) the replicated sf dir
     * at `/tmp/graft_soak_rep$rep` from `src` and return its path.
-    * Shared by this soak's main and Bench's per-round 8× headline
-    * sample (r10, verdict item 5). */
+    * Shared by this main, Bench's per-round 8× headline sample and
+    * PrefixSoak. */
   private[graft] def materialize(spark: SparkSession, src: String,
                                  rep: Int): String = {
     // cache key includes the SOURCE (r10 review): the bare legacy name
@@ -86,30 +91,34 @@ object ScaleSoak {
     dst
   }
 
+  /** The entries the scale read-out runs, grouped by the family whose
+    * growth they stand for. */
+  val entries: Seq[String] = Seq(
+    // relational: fact scans, fact⋈fact joins, per-key windows and top-k
+    "q01_agg", "q03_join_agg", "q08_window_rank", "q33_topk_agg",
+    "q38_semijoin_prune", "q42_nation_volume", "q44_dominant_supplier",
+    "q70_decayed_value", "q73_spearman", "q74_topk_rewrite",
+    "q92_basket_rules", "q93_kaplan_meier", "q99_fifo_cogs",
+    // events: as-of joins, cell-algebra tests, per-user pair joins
+    "aj1_asof_join", "aj2_asof_exec", "ev26_mannwhitney",
+    "ev38_rolling_wau", "ev42_pattern_match", "q101_theilsen",
+    "geo2_radius_join",
+    // corpus: token explodes, dedup and contamination
+    "tx16_token_rarity", "tx35_source_overlap", "dd2_minhash_lsh",
+    "dd7_contamination", "dd8_passage_dup", "dd9_semantic_dedup",
+    "dd10_containment", "dd11_bloom_contamination", "dd14_dup_span_coverage",
+    "pp4_incremental_corpus",
+    // vectors and graphs
+    "sim7_pq_ann", "sim8_ivfpq_ann", "sim10_covariance",
+    "gr2_pagerank", "gr12_hits", "gr14_scc", "gr15_betweenness",
+    "gr18_louvain")
+
   def main(args: Array[String]): Unit = {
     val rep = args.headOption.map(_.toInt).getOrElse(8)
     val src = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val spark = GraftSession.local(32)
-    val dst = materialize(spark, src, rep)
-
-    // SOAK_ONLY=a,b overrides the default top-wall-time list (used to
-    // soak newly-added heavy entries without re-timing the stable set)
-    val entries = sys.env.get("SOAK_ONLY")
-      .map(_.split(",").map(_.trim).toSeq)
-      .getOrElse(Seq(
-        "sim7_pq_ann", "sim8_ivfpq_ann",
-        "dd7_contamination", "dd10_containment", "dd11_bloom_contamination",
-        "gr12_hits", "gr18_louvain", "gr2_pagerank",
-        "pp4_incremental_corpus"))
-    for (name <- entries) {
-      val t0 = System.nanoTime()
-      try {
-        val n = SparkEntry.queries(name)(spark, dst).count()
-        println(f"SOAK rep=$rep $name rows=$n ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      } catch { case scala.util.control.NonFatal(e) =>
-        println(s"SOAK rep=$rep $name FAILED ${e.getMessage.take(200)}")
-      }
-    }
+    println(materialize(spark, src, rep))
+    println(entries.mkString(","))
     spark.stop()
   }
 }

@@ -1371,6 +1371,10 @@ object Graph {
       // SccSpec pins 1 ≡ 2 ≡ 4; 2 won the r8 A/B: 11.1 → 9.6 s warm at
       // sf0.1)
       scc(e, unrollHops = 2)
+        // the histogram is over documents, as in the oracle: on sparse
+        // ids (ScaleSoak's replica) a formula target can be no document,
+        // and the graph holds it as a singleton component of its own
+        .join(docs.select(col("doc_id").as("node")), Seq("node"), "left_semi")
         .groupBy("scc_id").agg(count(lit(1)).as("size"))
         .groupBy("size").agg(count(lit(1)).as("n_components"),
           min(col("scc_id")).as("min_scc_id"))

@@ -200,9 +200,9 @@ object PlanLint {
     * unpartitioned WindowExec nodes (data-scaling global sorts belong
     * on Blocked.cumulative's two-level form instead). */
   val boundedWindowAllowlist: Map[String, String] = Map(
-    // measured by graft.WindowAudit at sf0.001 (r7) — every entry below
-    // PLANS an unpartitioned WindowExec and declares why its frame is
-    // bounded. Time spines grow with the OBSERVATION DOMAIN (hours/days
+    // every entry below PLANS an unpartitioned WindowExec at sf0.001
+    // (CatalogSpec fails on an unlisted finding and on a stale key) and
+    // declares why its frame is bounded. Time spines grow with the OBSERVATION DOMAIN (hours/days
     // of history), never with row volume — the blessed class.
     "dd18_dup_rate_curve" -> "10-row id-decile slice frame",
     "ev16_interpolate" -> "hourly calendar spine — time-domain-bounded",
@@ -273,8 +273,7 @@ object PlanLint {
   }
 
   /** All global-window findings for one frame, with severities — the
-    * enumerable surface the CatalogSpec invariant and WindowAudit tool
-    * both read. */
+    * enumerable surface the CatalogSpec invariant reads. */
   def globalWindows(df: DataFrame): Seq[Finding] =
     lint(df).filter(_.rule == "global-window")
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import graft.GraftSession
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -88,13 +89,20 @@ object FunnelSoak {
       spark.conf.set(s"$p.rocksdb.maxMemoryUsageMB", stateMb)
     }
     val a = m.args.indices.map(i => args.lift(i).fold(m.args(i))(_.toLong))
+    // landing dirs, checkpoints and sinks live under one temp dir that
+    // goes when the mode returns or throws; a throw can leave the mode's
+    // queries running over it, so they stop first
     val dir = Files.createTempDirectory(s"funnel_$mode").toString
-    val lines = mode match {
-      case "base" => base(spark, dir, a(0), a(1).toInt)
-      case "recovery" | "scale" => killResume(spark, dir, mode, a(0), a(1).toInt, stateMb)
-      case "skew" => skew(spark, dir, a(0), a(1).toInt, a(2), a(3), stateMb, ttlMs)
-      case "rescale" => rescale(spark, dir, a(0), a(1).toInt, a(2).toInt, a(3).toInt)
-    }
+    val lines =
+      try mode match {
+        case "base" => base(spark, dir, a(0), a(1).toInt)
+        case "recovery" | "scale" => killResume(spark, dir, mode, a(0), a(1).toInt, stateMb)
+        case "skew" => skew(spark, dir, a(0), a(1).toInt, a(2), a(3), stateMb, ttlMs)
+        case "rescale" => rescale(spark, dir, a(0), a(1).toInt, a(2).toInt, a(3).toInt)
+      } catch { case e: Throwable =>
+        spark.streams.active.foreach(q => scala.util.Try(q.stop()))
+        throw e
+      } finally FileUtils.deleteDirectory(new java.io.File(dir))
     Result(lines, lines.forall(_("ok") == true))
   }
 
@@ -195,14 +203,16 @@ object FunnelSoak {
         rocksDb = rocksDb ||
           cm.keySet().toArray(Array.empty[String]).exists(_.startsWith("rocksdb"))
         def metric(k: String): Long = Option(cm.get(k)).map(_.longValue()).getOrElse(0L)
-        peakMem = math.max(peakMem, metric("rocksdbPinnedBlocksMemoryUsage"))
+        // the store's memory: memtables, table readers and block cache,
+        // so state not yet flushed to SST is counted too
+        peakMem = math.max(peakMem, so.map(_.memoryUsedBytes).sum)
         peakSst = math.max(peakSst, metric("rocksdbSstFileSize"))
         compactionMs = math.max(compactionMs, metric("rocksdbTotalCompactionLatencyMs"))
       }
     }
 
-    /** The durable footprint: the larger of pinned memory and SST bytes
-      * over the peak live rows. */
+    /** The footprint: the larger of store memory and SST bytes over the
+      * peak live rows. */
     def bytesPerKey: Double =
       if (peakRows > 0) r1(math.max(peakMem, peakSst).toDouble / peakRows) else -1.0
   }

@@ -23,6 +23,13 @@ class CatalogSpec extends SparkSpecBase {
     assert(stale.isEmpty, s"stale allowlist keys: $stale")
   }
 
+  test("the scale read-out's entries are live catalog keys, each listed once") {
+    val names = ScaleSoak.entries
+    assert(names.distinct.size === names.size, s"duplicates: ${names.diff(names.distinct)}")
+    val stale = names.toSet -- SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"ScaleSoak.entries not in the catalog: $stale")
+  }
+
   SparkEntry.all.foreach { q =>
     test(s"${q.name} executes and returns rows at sf0.001") {
       val df = q.run(spark, sf0001)

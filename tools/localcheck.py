@@ -26,7 +26,9 @@ def main():
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+            # a Spark-written table (ScaleSoak's replica) is a dir of parts
+            src = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     fails = 0
     # a requested name must not pass by being skipped: no oracle is
