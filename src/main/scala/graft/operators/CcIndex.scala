@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Durable + incremental connected components (SURVEY.md §2 L4e) — the
   * cluster-label index that grows with the dedup pair stream. dd5
@@ -33,29 +34,78 @@ object CcIndex {
 
   private def labelsPath(dir: String) = s"$dir/labels"
 
-  /** Current labels `(id, component)`; empty frame before any update. */
-  def snapshot(spark: SparkSession, dir: String): DataFrame = {
+  private def hasLabels(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(labelsPath(dir))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasBuckets = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("__kb="))
-    if (!hasBuckets) {
+    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("__kb="))
+  }
+
+  /** Current labels `(id, component)`; empty frame before any update. */
+  def snapshot(spark: SparkSession, dir: String): DataFrame =
+    if (!hasLabels(spark, dir)) {
       import spark.implicits._
       Seq.empty[(Long, Long)].toDF("id", "component")
     } else
       spark.read.parquet(labelsPath(dir)).select("id", "component")
-  }
 
   /** Merge a batch of near-dup pairs `(id_a, id_b)` into the label
     * state. Work is O(batch + members-of-merged-components); label
-    * buckets without touched members are not rewritten. */
+    * buckets without touched members are not rewritten. An empty pair
+    * batch writes nothing.
+    *
+    * SIZE-ADAPTIVE: when the batch's pairs and the label snapshot both
+    * fit [[SizeGate.CcSymmetrizedRows]] (two bounded collects, one job
+    * each), the root lookup, the contracted union-find
+    * ([[Dedup.unionFind]]) and the upsert set are computed on the
+    * driver; otherwise the distributed root-graph contraction below
+    * runs. Both hand the same upsert rows to the bucketed sink. */
   def update(spark: SparkSession, dir: String, pairs: DataFrame,
              batchId: Long, numBuckets: Int = 64): Unit = {
-    // single consumer (the root mapping below, which is itself
-    // checkpointed) — no checkpoint needed; one eager action fewer
     val e = pairs.select(col("id_a"), col("id_b"))
       .filter(col("id_a").isNotNull && col("id_b").isNotNull)
-      .distinct()
+    val longIds = e.schema.fields.forall(_.dataType == LongType)
+    val pairRows =
+      if (longIds) SizeGate.rowsIfBounded(e, SizeGate.CcSymmetrizedRows / 2)
+      else None
+    val labelRows = pairRows.filter(_.nonEmpty).flatMap { _ =>
+      if (!hasLabels(spark, dir)) Some(Array.empty[Row])
+      else SizeGate.rowsIfBounded(snapshot(spark, dir), SizeGate.CcSymmetrizedRows)
+    }
+    val upserts = (pairRows, labelRows) match {
+      case (Some(ps), _) if ps.isEmpty => None // nothing to merge: write nothing
+      case (Some(ps), Some(ls)) =>
+        import spark.implicits._
+        Some(localUpserts(ps.map(r => (r.getLong(0), r.getLong(1))),
+          ls.map(r => (r.getLong(0), r.getLong(1)))).toDF("id", "component"))
+      case _ => distributedUpserts(spark, dir, e.distinct())
+    }
+    upserts.foreach(u => graft.streaming.EventStream.upsertSinkBucketed(
+      u.withColumn("__v", lit(batchId)), batchId, labelsPath(dir),
+      keyCol = "id", versionCol = "__v", numBuckets = numBuckets))
+  }
+
+  /** The local merge: each endpoint's current root (absent node = its
+    * own root), the union-find over the contracted root edges, and the
+    * upsert set — existing members of merged components plus every
+    * endpoint under its final root. */
+  private def localUpserts(pairs: Array[(Long, Long)],
+                           labels: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val root = labels.toMap
+    def rootOf(x: Long): Long = root.getOrElse(x, x)
+    val remap = Dedup.unionFind(pairs.iterator
+      .map { case (a, b) => (rootOf(a), rootOf(b)) }.filter { case (a, b) => a != b })
+    def finalOf(r: Long): Long = remap.getOrElse(r, r)
+    val moved = labels.iterator.collect {
+      case (id, c) if finalOf(c) != c => id -> finalOf(c)
+    }
+    val endpoints = pairs.iterator.flatMap { case (a, b) => Iterator(a, b) }
+      .map(x => x -> finalOf(rootOf(x)))
+    (moved ++ endpoints).toMap.toSeq
+  }
+
+  /** The at-scale merge, as distributed joins; None for an empty batch. */
+  private def distributedUpserts(spark: SparkSession, dir: String,
+                                 e: DataFrame): Option[DataFrame] = {
     val labels = snapshot(spark, dir)
       .localCheckpoint(true) // root lookup + member remap consume it
     // batch endpoints → current roots (absent node roots itself)
@@ -68,6 +118,7 @@ object CcIndex {
         coalesce(col("ra"), col("id_a")).as("ra"),
         coalesce(col("rb"), col("id_b")).as("rb"))
       .localCheckpoint(true) // root graph + per-node root rows consume it
+    if (withRoots.isEmpty) return None
     // contracted root graph: one node per touched component
     val rootEdges = withRoots.filter(col("ra") =!= col("rb"))
       .select(col("ra").as("id_a"), col("rb").as("id_b")).distinct()
@@ -87,10 +138,6 @@ object CcIndex {
       .distinct()
       .join(remap.withColumnRenamed("old_root", "component"), Seq("component"), "left")
       .select(col("id"), coalesce(col("new_root"), col("component")).as("component"))
-    val upserts = movedExisting.unionByName(batchNodes).distinct()
-      .withColumn("__v", lit(batchId))
-    graft.streaming.EventStream.upsertSinkBucketed(
-      upserts, batchId, labelsPath(dir), keyCol = "id", versionCol = "__v",
-      numBuckets = numBuckets)
+    Some(movedExisting.unionByName(batchNodes).distinct())
   }
 }

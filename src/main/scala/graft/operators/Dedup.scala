@@ -5,6 +5,8 @@ import graft.plans.Lineage
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Deduplication catalog (SURVEY.md §2 L1–L4): exact, MinHash+LSH,
   * SimHash. All pipelines are linear in corpus size — candidate
   * generation never goes quadratic in the corpus, only within LSH
@@ -293,6 +295,30 @@ object Dedup {
     out
   }
 
+  /** Exact min-label union-find on the driver: every endpoint of
+    * `edges` → the min id of its component (unions go toward the
+    * smaller root, so the final root IS the component minimum, matching
+    * the distributed fixpoint below). The one driver-side CC kernel:
+    * [[connectedComponents]]' local branch and [[CcIndex.update]]'s
+    * local merge both call it. */
+  private[operators] def unionFind(edges: Iterator[(Long, Long)]): Map[Long, Long] = {
+    val parent = new java.util.HashMap[Long, Long]() // every node; a root maps to itself
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x // path compression
+      while (c != r) { val nxt = parent.get(c); parent.put(c, r); c = nxt }
+      r
+    }
+    edges.foreach { case (x, y) =>
+      parent.putIfAbsent(x, x); parent.putIfAbsent(y, y)
+      val (a, b) = (find(x), find(y))
+      if (a < b) parent.put(b, a) else if (b < a) parent.put(a, b)
+    }
+    // copy the node set first: find's path compression writes to parent
+    parent.keySet.asScala.toArray.map(id => id -> find(id)).toMap
+  }
+
   /** Distributed connected components: per round, every node takes the
     * min label among itself and its neighbors (hash-join min-propagation)
     * and then POINTER-JUMPS (takes its label's label), so convergence is
@@ -331,27 +357,10 @@ object Dedup {
       else None
     localRows match {
       case Some(rows) =>
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-          var c = x // path compression
-          while (parent.getOrDefault(c, c) != c) {
-            val nxt = parent.get(c); parent.put(c, r); c = nxt
-          }
-          r
-        }
-        rows.foreach { r =>
-          val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
-          // union toward the smaller root: the final root IS the
-          // component minimum, matching the distributed fixpoint
-          if (a < b) parent.put(b, a) else if (b < a) parent.put(a, b)
-        }
-        val out = rows.iterator.map(_.getLong(0)).toSet.toSeq.sorted
-          .map(id => (id, find(id)))
         val s = pairs.sparkSession
         import s.implicits._
-        return out.toDF("id", "component")
+        return unionFind(rows.iterator.map(r => (r.getLong(0), r.getLong(1))))
+          .toSeq.sortBy(_._1).toDF("id", "component")
       case None =>
     }
     var labels = Lineage.truncate(

@@ -93,15 +93,17 @@ object IncrementalCorpus {
     // and the cross-pair sizes below
     val stored = storedDocs(spark, stateDir, batchId)
       .select(col("doc_id"), col("h"), col("ng")).localCheckpoint(true)
-    // cross-batch exact dedup: first arrival wins
-    val fresh = fresh0
+    // cross-batch exact dedup (first arrival wins), then ONE shingling
+    // checkpoint that the inverted index, the pair sizes and the doc
+    // append (which reads its `h` from here) all share
+    val sg = fresh0
       .join(stored.select("h").distinct(), Seq("h"), "left_anti")
-      .localCheckpoint(true) // shingling + doc append consume it
-    val sg = fresh
-      .select(col("doc_id"), array_distinct(Dedup.shingles(col("t"))).as("sg"))
-      .localCheckpoint(true) // inverted index + sizes share one shingling
+      .select(col("doc_id"), col("h"),
+        array_distinct(Dedup.shingles(col("t"))).as("sg"))
+      .localCheckpoint(true)
     val grams = sg.select(col("doc_id"), explode(col("sg")).as("g"))
-    val sizes = sg.select(col("doc_id"), size(col("sg")).cast("long").as("ng"))
+    // the batch's doc rows, in the stored docs' (doc_id, h, ng) shape
+    val sizes = sg.select(col("doc_id"), col("h"), size(col("sg")).cast("long").as("ng"))
 
     // near-dup pairs: within-batch self-join + batch-vs-stored join,
     // both through the shingle-keyed inverted index (never all-pairs)
@@ -131,16 +133,15 @@ object IncrementalCorpus {
     // among them — a crash anywhere before the marker leaves the batch
     // invisible (stored reads exclude it), the replay recomputes the
     // identical pair set, CcIndex.update is a no-op on already-merged
-    // pairs, and the appends are partition OVERWRITES. Inputs are all
-    // derived from checkpointed frames, so the concurrent actions never
-    // recompute a shared uncheckpointed lineage.
-    val hasPairs = pairs.limit(1).count() > 0
+    // pairs and writes nothing for an empty pair set (no emptiness
+    // probe here: its bounded pair collect already shows it), and the
+    // appends are partition OVERWRITES. Inputs are all derived from
+    // the two checkpoints (shingles, pairs), so the concurrent actions
+    // never recompute a shared uncheckpointed lineage.
     PrefixIndex.inParallel(
-      () => if (hasPairs)
-        CcIndex.update(spark, ccDir(stateDir), pairs, batchId, numBuckets),
-      () => sizes.join(fresh.select("doc_id", "h"), Seq("doc_id"))
-        .select("doc_id", "h", "ng")
-        .write.mode("overwrite").parquet(s"${docsDir(stateDir)}/__batch=$batchId"),
+      () => CcIndex.update(spark, ccDir(stateDir), pairs, batchId, numBuckets),
+      () => sizes.write.mode("overwrite")
+        .parquet(s"${docsDir(stateDir)}/__batch=$batchId"),
       () => grams.write.mode("overwrite")
         .parquet(s"${gramsDir(stateDir)}/__batch=$batchId"))
     fs.mkdirs(marker.getParent)

@@ -27,7 +27,8 @@ private[graft] object SizeGate {
   /** [[GraphLocal]] kernels: collected edge/seed/node rows (≈ 16 MB). */
   final val GraphLocalRows = 1000000
   /** [[Dedup.connectedComponents]] union-find: symmetrized edge rows,
-    * i.e. 1M undirected pairs (≈ 16 MB). */
+    * i.e. 1M undirected pairs (≈ 16 MB). [[CcIndex.update]]'s local
+    * merge takes the same 1M pairs, and as many stored label rows. */
   final val CcSymmetrizedRows = 2000000
   /** ev53/ev58/ev91 driver recurrences: transition-matrix rows. */
   final val MarkovLocalRows = 100000

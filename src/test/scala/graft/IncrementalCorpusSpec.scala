@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.IncrementalCorpus
+import graft.operators.{IncrementalCorpus, SizeGate}
 import org.apache.spark.sql.functions._
 
 /** The composed incremental curation pipeline: fixture semantics,
@@ -63,21 +63,44 @@ class IncrementalCorpusSpec extends SparkSpecBase {
     assert(canon(twoWay).nonEmpty)
   }
 
-  test("replaying a completed batch is a no-op; an interrupted batch " +
-    "(marker lost, partial writes present) recovers exactly") {
+  // both branches of CcIndex's merge keep the crash, replay and
+  // marker-last contracts: the local one these batches take by default,
+  // and the distributed one forced at scale
+  Seq(false, true).foreach { forced =>
+    test("replaying a completed batch is a no-op; an interrupted batch " +
+      "(marker lost, partial writes present) recovers exactly" +
+      (if (forced) " (at scale)" else "")) {
+      def branch(body: => Unit): Unit =
+        if (forced) SizeGate.atScale(body) else body
+      val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+      val state = newState()
+      branch {
+        IncrementalCorpus.ingest(spark, state, 0L, docs.filter($"doc_id" % 2 === 0))
+        IncrementalCorpus.ingest(spark, state, 1L, docs.filter($"doc_id" % 2 === 1))
+      }
+      val before = canon(state)
+      // completed replay: marker present -> no-op
+      branch(IncrementalCorpus.ingest(spark, state, 1L, docs.filter($"doc_id" % 2 === 1)))
+      assert(canon(state) === before)
+      // interrupted ingest: batch 1's marker is gone but its partitions and
+      // label merges landed — the replay must converge to the same state
+      val marker = new java.io.File(s"$state/_batches/1")
+      assert(marker.exists()); assert(marker.delete())
+      branch(IncrementalCorpus.ingest(spark, state, 1L, docs.filter($"doc_id" % 2 === 1)))
+      assert(canon(state) === before)
+    }
+  }
+
+  // a small second ingest (stored docs, grams and labels to match
+  // against) takes CcIndex's local merge: two checkpoints (stored docs;
+  // shingles), the pair checkpoint, the three writes, the two bounded
+  // collects, the bucketed sink's own jobs, the state reads' schema
+  // inference, and the broadcast and shuffle-stage jobs AQE submits.
+  test("one small ingest runs a pinned number of Spark jobs") {
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
     val state = newState()
     IncrementalCorpus.ingest(spark, state, 0L, docs.filter($"doc_id" % 2 === 0))
-    IncrementalCorpus.ingest(spark, state, 1L, docs.filter($"doc_id" % 2 === 1))
-    val before = canon(state)
-    // completed replay: marker present -> no-op
-    IncrementalCorpus.ingest(spark, state, 1L, docs.filter($"doc_id" % 2 === 1))
-    assert(canon(state) === before)
-    // interrupted ingest: batch 1's marker is gone but its partitions and
-    // label merges landed — the replay must converge to the same state
-    val marker = new java.io.File(s"$state/_batches/1")
-    assert(marker.exists()); assert(marker.delete())
-    IncrementalCorpus.ingest(spark, state, 1L, docs.filter($"doc_id" % 2 === 1))
-    assert(canon(state) === before)
+    assert(jobsDuring(IncrementalCorpus.ingest(
+      spark, state, 1L, docs.filter($"doc_id" % 2 === 1))) === 24)
   }
 }
